@@ -16,10 +16,13 @@ Differences, all deliberate:
 - methods return lazy DataFrames: the HEAVY work (decode, joins,
   geometry) runs only when an action does, so chaining a bbox + filter
   compiles into ONE Catalyst plan with pushdown (the reference
-  re-parses the PBF per call and caches, `pyrosm.py:255-271`). Two
-  small jobs do execute at call time: the occurring-tag-keys scan that
-  decides presentation columns (the result schema is data-driven, so
-  it cannot be deferred) and the relation join-strategy size probes;
+  re-parses the PBF per call and caches, `pyrosm.py:255-271`). Only
+  the occurring-tag-keys scan that decides presentation columns runs
+  at call time (the result schema is data-driven, so it cannot be
+  deferred). Relation assembly picks its member-lookup joins from
+  Catalyst's static size estimates, which runs no job; only when the
+  way or node table is estimated over the broadcast threshold (a
+  planet's) does one count probe of the member set run;
 - `engine=`/`workers=` knobs don't exist — parallelism belongs to the
   SparkSession.
 """

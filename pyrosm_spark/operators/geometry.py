@@ -44,8 +44,11 @@ def way_coordinates(ways: DataFrame, nodes: DataFrame,
     member assembly: dozens-to-thousands of ways probing a planet-sized
     node table): the exploded refs and the aggregated pts are broadcast
     so the node table is stream-scanned once with ZERO shuffles,
-    instead of fully reshuffling it for a tiny probe side. Callers must
-    know the way set is broadcast-sized (see assemble_relations' probe).
+    instead of fully reshuffling it for a tiny probe side. AQE cannot
+    make that switch: a sort-merge join planned from static sizes
+    submits the node table's shuffle before the probe side's size is
+    known. Callers must know the way set is broadcast-sized (see
+    ``relations.assemble_relations``).
     """
     refs = ways.select(F.col("id").alias("way_id"),
                        F.posexplode("refs").alias("pos", "ref"))
@@ -175,9 +178,21 @@ def spread_for_udf(df: DataFrame) -> DataFrame:
     a 475k-way world, stable across partition counts). The cost is one
     exchange of the pts frame — one extra pass over the coordinate
     payload, bought back by a clean, evenly-sized Python stage.
+
+    The exchange is a ``REBALANCE``: AQE sizes its partitions from the
+    bytes actually shuffled (``advisoryPartitionSizeInBytes``, split
+    when skewed). A large frame still fans out over every core, while a
+    small one runs as one or two Python tasks. A fixed partition count
+    (``2 x defaultParallelism``) would spend eight Python tasks on a few
+    thousand ways on 4 cores, and each task pays a Python worker round
+    trip that costs more than its rows (see ``session.py``).
+    Spark ignores the hint when AQE is off; that session gets the fixed
+    count instead.
     """
-    n = df.sparkSession.sparkContext.defaultParallelism * 2
-    return df.repartition(n)
+    spark = df.sparkSession
+    if spark.conf.get("spark.sql.adaptive.enabled") == "true":
+        return df.hint("rebalance")
+    return df.repartition(spark.sparkContext.defaultParallelism * 2)
 
 
 @F.pandas_udf(T.BinaryType())

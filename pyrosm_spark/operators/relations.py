@@ -133,12 +133,41 @@ def relation_member_ways(relations: DataFrame) -> DataFrame:
     )
 
 
+# Largest member set broadcast when static sizes cannot vouch for it.
+# What gets broadcast is the member ways' exploded refs and point
+# structs (~20-50 bytes per ref): tens of MB at ~10 refs per way. The
+# ref total itself is not probed.
 _BROADCAST_MEMBER_PROBE = 100_000
-# What actually gets broadcast downstream is the POSEXPLODED refs of
-# the member ways plus the aggregated point structs (~16-50 bytes per
-# ref), not the member list itself — so the auto decision must also
-# bound the ref total (1M refs ≈ tens of MB serialized).
-_BROADCAST_REFS_PROBE = 1_000_000
+
+
+def _estimate_fits_broadcast(df: DataFrame) -> bool:
+    """Whether Catalyst's static size estimate of ``df`` is within
+    ``spark.sql.autoBroadcastJoinThreshold``. Reads the optimized plan's
+    statistics, so no job runs."""
+    threshold = df.sparkSession._jsparkSession.sessionState().conf() \
+        .autoBroadcastJoinThreshold()
+    size = int(df._jdf.queryExecution().optimizedPlan().stats()
+               .sizeInBytes())
+    return 0 <= size <= threshold
+
+
+def _broadcast_member_lookups(members: DataFrame, ways: DataFrame,
+                              nodes: DataFrame) -> bool:
+    """Pick the member lookups' join strategy: True = broadcast the
+    member ways explicitly, False = leave the joins to the planner.
+
+    When the way and node tables are both estimated within the broadcast
+    threshold, the planner broadcasts every lookup from static sizes and
+    no job runs. Otherwise a small member set would still be planned as
+    a sort-merge join against the node table: without CBO a filter or a
+    semi-join does not shrink the estimate, and AQE submits the node
+    table's shuffle before it learns the member side is small. So one
+    LIMIT-bounded count of the member rows (a relations-table-only
+    action) decides."""
+    if _estimate_fits_broadcast(ways) and _estimate_fits_broadcast(nodes):
+        return False
+    probe = members.limit(_BROADCAST_MEMBER_PROBE + 1).count()
+    return probe <= _BROADCAST_MEMBER_PROBE
 
 
 def assemble_relations(
@@ -146,67 +175,47 @@ def assemble_relations(
     ways: DataFrame,
     nodes: DataFrame,
     member_way_restriction: DataFrame | None = None,
-    broadcast_members: bool | None = None,
 ) -> DataFrame:
     """Relations + geometry. ``member_way_restriction`` (optional set of
     allowed way ids, e.g. in-box ways when complete_relations=False,
     J6/collect.py:606-623) limits which member ways participate.
 
-    ``broadcast_members`` picks the join strategy for resolving member
-    ways against the (possibly planet-sized) way/node tables. True =
-    broadcast the member list so both lookups become stream-scans with
-    no shuffle of the big tables (the reference's in-memory node index,
-    expressed Spark-side); False = plain shuffle joins (correct when
-    the kept-relation member set itself is huge); None (default) =
-    decide with one LIMIT-bounded count probe of the member list —
-    a cheap relations-table-only action."""
+    The member lookups against the (possibly planet-sized) way and node
+    tables stream-scan those tables without a shuffle when the member
+    set is small, and keep shuffle joins when it is huge. Building the
+    plan runs no Spark job when both tables are estimated within the
+    broadcast threshold, and one count probe otherwise (see
+    :func:`_broadcast_member_lookups`)."""
     members = relation_member_ways(relations)
     if member_way_restriction is not None:
         members = members.join(
             member_way_restriction.select(F.col("id").alias("way_id")),
             "way_id", "left_semi",
         )
-    if broadcast_members is None:
-        probe = members.limit(_BROADCAST_MEMBER_PROBE + 1).count()
-        broadcast_members = probe <= _BROADCAST_MEMBER_PROBE
-        if broadcast_members:
-            # second probe: bound the exploded-refs broadcast payload,
-            # not just the member count — a column-pruned (id,
-            # size(refs)) pass over ways, semi-joined to the (already
-            # known small) member list
-            refs_total = (
-                ways.select(F.col("id").alias("way_id"),
-                            F.size("refs").alias("_n_refs"))
-                .join(F.broadcast(members.select("way_id").distinct()),
-                      "way_id", "left_semi")
-                .agg(F.sum("_n_refs")).first()[0]
-            )
-            broadcast_members = (refs_total or 0) <= _BROADCAST_REFS_PROBE
     # Resolve each DISTINCT member way's coordinates ONCE: a way
     # shared by k kept relations has k (rel_id, way_id) member rows,
     # and exploding refs per member row would make way_coordinates'
     # groupBy(way_id) collect every vertex k times — handing k-fold
     # duplicated pts (wrong MultiLineString WKB; multipolygons only
     # survived because fix_ring's polygonize dedupes) to all k rows,
-    # and inflating the broadcast payload past what the refs_total
-    # probe above bounded. The reference resolves per way too (its
-    # node-index lookup is keyed by the way).
+    # and inflating the broadcast payload. The reference resolves per
+    # way too (its node-index lookup is keyed by the way).
+    small = _broadcast_member_lookups(members, ways, nodes)
     uniq_ids = members.select("way_id").distinct()
     uniq_ways = ways.select(F.col("id").alias("way_id"), "refs").join(
-        F.broadcast(uniq_ids) if broadcast_members else uniq_ids,
+        F.broadcast(uniq_ids) if small else uniq_ids,
         "way_id", "left_semi")
     with_pts = geom.spread_for_udf(geom.way_coordinates(
         uniq_ways.withColumnRenamed("way_id", "id"), nodes,
-        broadcast_ways=broadcast_members,
+        broadcast_ways=small,
     ).filter(geom.pts_size() >= 2))
     way_lines = with_pts.select(
         F.col("id").alias("way_id"),
         geom.way_geometry_wkb(F.col(geom.PTS_FIELD), F.lit(False))
         .alias("_line"),
     )
-    m = members
-    member_lines = m.join(
-        F.broadcast(way_lines) if broadcast_members else way_lines,
+    member_lines = members.join(
+        F.broadcast(way_lines) if small else way_lines,
         "way_id", "inner",
     ).withColumnRenamed("way_id", "id")
     # The reference assembles by geometry, order-independent (#21) —

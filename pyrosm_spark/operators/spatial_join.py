@@ -246,7 +246,10 @@ def wkb_bbox(geometry: pd.Series) -> pd.DataFrame:
 def cover_cells_dyn_expr(bbox_col: str, res_col: F.Column) -> F.Column:
     """All cells intersecting a bbox struct at a PER-ROW resolution —
     *native SQL* polyfill: sequence() over the x/y index ranges,
-    flattened. Keeps cover generation inside codegen."""
+    flattened. Keeps cover generation inside codegen. A bbox with null
+    bounds (null, empty or, from segment sets, non-polygon geometry)
+    covers no cells; the clamped index alone would put it in the
+    grid's last cell."""
     b = F.col(bbox_col)
     r = res_col.cast("int")
     # 2^r with a per-row r (shiftleft needs a literal bit count);
@@ -261,7 +264,7 @@ def cover_cells_dyn_expr(bbox_col: str, res_col: F.Column) -> F.Column:
     x0, x1 = idx(b["xmin"], 180.0, 360.0), idx(b["xmax"], 180.0, 360.0)
     y0, y1 = idx(b["ymin"], 90.0, 180.0), idx(b["ymax"], 90.0, 180.0)
     base = F.shiftleft(r.cast("long"), _RES_SHIFT)
-    return F.flatten(
+    return F.when(b["xmin"].isNotNull(), F.flatten(
         F.transform(
             F.sequence(x0, x1),
             lambda x: F.transform(
@@ -269,7 +272,7 @@ def cover_cells_dyn_expr(bbox_col: str, res_col: F.Column) -> F.Column:
                 lambda y: base + F.shiftleft(x, _X_SHIFT) + y,
             ),
         )
-    )
+    ))
 
 
 def cover_cells_expr(bbox_col: str, res: int) -> F.Column:
@@ -279,11 +282,39 @@ def cover_cells_expr(bbox_col: str, res: int) -> F.Column:
     return cover_cells_dyn_expr(bbox_col, F.lit(res))
 
 
+def segsets_bbox(segsets_col: str = "_segsets") -> F.Column:
+    """Polygon bbox from its decoded segment sets, in Catalyst. Every
+    ring vertex starts one segment, so the min/max over segment start
+    points is the bbox of the polygon's rings. Null when the row has no
+    segments (null, empty or non-polygon geometry)."""
+    segs = F.flatten(F.col(segsets_col))
+    xs = F.transform(segs, lambda sg: sg["x1"])
+    ys = F.transform(segs, lambda sg: sg["y1"])
+    return F.struct(
+        F.array_min(xs).alias("xmin"), F.array_min(ys).alias("ymin"),
+        F.array_max(xs).alias("xmax"), F.array_max(ys).alias("ymax"),
+    )
+
+
+def _with_bbox(polygons: DataFrame, geometry_col: str) -> DataFrame:
+    """Add ``bbox`` when absent: from ``_segsets`` when the frame carries
+    them (no second WKB decode), else from the WKB."""
+    if "bbox" in polygons.columns:
+        return polygons
+    return polygons.withColumn(
+        "bbox", segsets_bbox() if "_segsets" in polygons.columns
+        else wkb_bbox(F.col(geometry_col)))
+
+
 def polygon_cover(polygons: DataFrame, res: int,
                   geometry_col: str = "geometry") -> DataFrame:
-    """One row per (feature, covering cell). Adds ``bbox`` when absent."""
-    if "bbox" not in polygons.columns:
-        polygons = polygons.withColumn("bbox", wkb_bbox(F.col(geometry_col)))
+    """One row per (feature, covering cell). Adds ``bbox`` when absent
+    (see :func:`_with_bbox`). When the frame carries ``_segsets``, the
+    bbox comes from them, so a row without segment sets (a LineString
+    or Point geometry, or an empty polygon) gets a null bbox and no
+    cover rows; without ``_segsets`` only null and empty geometries
+    are dropped."""
+    polygons = _with_bbox(polygons, geometry_col)
     return polygons.withColumn(
         "cell", F.explode(cover_cells_expr("bbox", res))
     )
@@ -606,11 +637,10 @@ def point_in_polygon_join_compact(
     if how not in ("inner", "left"):
         raise ValueError(f"unknown how {how!r} (inner|left)")
     in_points = points
-    if "bbox" not in polygons.columns:
-        polygons = polygons.withColumn("bbox", wkb_bbox(F.col("geometry")))
     if refine == "native" and "_segsets" not in polygons.columns:
         polygons = polygons.withColumn(
             "_segsets", wkb_segment_sets(F.col("geometry")))
+    polygons = _with_bbox(polygons, "geometry")
     # The polygon side is the feature side — orders of magnitude below
     # the point side by construction. It is evaluated several times
     # below (compaction's per-level jobs, the levels collect, the final
@@ -729,11 +759,12 @@ def point_in_polygon_join(
                 cov = cov.withColumnRenamed(c, f"poly_{c}")
         return cov
 
-    # The derived cover (WKB decode -> segment sets + bbox + cell
-    # explode) is the polygon-DIM side: orders of magnitude below the
-    # point side, but its two Arrow kernel passes cost ~1 s per ACTION
-    # regardless of size (measured 1.0-1.2 s at 4,061 polygons vs
-    # ~0.6 s for the 8M-point join+refine itself). Repeated queries
+    # The derived cover (WKB decode -> segment sets, then bbox + cell
+    # explode in Catalyst) is the polygon-DIM side: orders of magnitude
+    # below the point side, but its Arrow decode costs ~1 s per ACTION
+    # regardless of size (measured 1.0-1.2 s at 4,061 polygons, with the
+    # bbox as a second kernel, vs ~0.6 s for the 8M-point join+refine
+    # itself). Repeated queries
     # against the SAME polygon set — the steady-state shape of a tiling
     # service, and what the bench times — re-derived it on every call.
     # Pin it with cross-call semantic reuse: a later call whose polygon

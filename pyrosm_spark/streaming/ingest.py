@@ -258,8 +258,8 @@ def streaming_pip_join(images: DataFrame, polygons,
     """
     from pyrosm_spark.operators.spatial_join import (
         _pin,
+        _with_bbox,
         point_in_polygon_join,
-        wkb_bbox,
         wkb_segment_sets,
     )
 
@@ -267,11 +267,10 @@ def streaming_pip_join(images: DataFrame, polygons,
         raise ValueError("streaming_pip_join supports how='inner' only "
                          "(the left arm's anti-join cannot run on an "
                          "unbounded stream)")
-    if "bbox" not in polygons.columns:
-        polygons = polygons.withColumn("bbox", wkb_bbox(F.col("geometry")))
     if kw.get("refine", "native") == "native" \
             and "_segsets" not in polygons.columns:
         polygons = polygons.withColumn(
             "_segsets", wkb_segment_sets(F.col("geometry")))
+    polygons = _with_bbox(polygons, "geometry")
     polygons = _pin(f"stream_pip#{next(_STREAM_PIP_SEQ)}", polygons)
     return point_in_polygon_join(images, polygons, res=res, **kw)

@@ -36,6 +36,28 @@ def plan_of(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+def path_to_join(plan: str, scan_substr: str) -> list:
+    """Operators from the scan whose line holds ``scan_substr`` up to and
+    including its nearest join ancestor, bottom-up, with tree prefixes
+    and codegen stage ids stripped."""
+    def depth(line):
+        return len(line) - len(line.lstrip(" :|+-"))
+
+    def op(line):
+        return line.lstrip(" :|+-*(0123456789) ")
+
+    lines = plan.splitlines()
+    i = next(k for k, ln in enumerate(lines) if scan_substr in ln)
+    path, d = [op(lines[i])], depth(lines[i])
+    for ln in reversed(lines[:i]):
+        if depth(ln) < d:
+            d = depth(ln)
+            path.append(op(ln))
+            if "Join" in ln:
+                break
+    return path
+
+
 def simple_plan(df) -> str:
     return df._jdf.queryExecution().simpleString()
 
@@ -118,17 +140,34 @@ def main():
     check("zorder scan: no Python in plan",
           "ArrowEvalPython" not in p and "MapInPandas" not in p)
 
-    # 6. relation assembly: the member probe broadcasts so the big
-    # way/node tables never shuffle for a metadata-sized member list
+    # 6. relation assembly: a metadata-sized member set is broadcast so
+    # the big way/node tables never shuffle for it. Two regimes: tables
+    # estimated within the broadcast threshold (the planner broadcasts
+    # from static sizes, no probe job) and tables over it, as a planet's
+    # are (a count probe, then explicit broadcasts). A threshold of 1 KB
+    # puts the synthetic tables in the second regime.
     from pyrosm_spark.functions.filters import element_filter_column
     from pyrosm_spark.operators.relations import assemble_relations
     _, w2, r2 = load_osm(spark, em.SYNTH_DIR)
     pred = element_filter_column(F.col("tags"), {"building": True})
-    rel = assemble_relations(r2.filter(pred), w2, nodes,
-                             broadcast_members=True)
-    p = plan_of(rel.select("id", "geometry"))
-    check("assemble_relations: member lookups are broadcast joins",
-          "BroadcastHashJoin" in p)
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    default_threshold = spark.conf.get(key)
+    for regime, threshold in (("within threshold", default_threshold),
+                              ("over threshold", "1024")):
+        spark.conf.set(key, threshold)
+        try:
+            p = plan_of(assemble_relations(r2.filter(pred), w2, nodes)
+                        .select("id", "geometry"))
+        finally:
+            spark.conf.set(key, default_threshold)
+        for table in ("osm_ways", "osm_nodes"):
+            path = path_to_join(p, table)
+            check(f"assemble_relations ({regime}): {table} scan reaches "
+                  "a broadcast join with no shuffle",
+                  path[-1].startswith("BroadcastHashJoin")
+                  and not [op for op in path if op.startswith("Exchange")],
+                  "" if path[-1].startswith("BroadcastHashJoin")
+                  else f"{path[1:]}")
 
     # 7. df-capped ngram join: the hot-shingle exclusion is a
     # broadcast anti-join (no shuffle of the shingle stream for it)

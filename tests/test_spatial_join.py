@@ -695,6 +695,54 @@ def test_wkb_bbox_empty_geometry_yields_null(spark):
     assert rows[3]["xmin"] == 0.0 and rows[3]["ymax"] == 1.0
 
 
+def test_segsets_bbox_equals_wkb_bbox_for_polygons(spark):
+    """The cover's Catalyst bbox (from decoded segment sets) equals the
+    WKB bbox kernel for every polygon shape, and is null for geometries
+    that have no segment sets, so polygon_cover over a frame carrying
+    ``_segsets`` gives such rows no cells."""
+    import struct
+
+    from pyrosm_spark.operators.spatial_join import (
+        segsets_bbox,
+        wkb_bbox,
+        wkb_segment_sets,
+    )
+
+    shell = np.array([[0.0, 0.0], [10.0, 0.0], [10.0, 10.0], [0.0, 10.0],
+                      [0.0, 0.0]])
+    hole = np.array([[4.0, 4.0], [6.0, 4.0], [6.0, 6.0], [4.0, 6.0],
+                     [4.0, 4.0]])
+    part2 = np.array([[20.0, -3.0], [22.0, -3.0], [22.0, 22.0],
+                      [20.0, 22.0], [20.0, -3.0]])
+    polygons = {
+        1: G.wkb_polygon([shell]),
+        2: G.wkb_polygon([shell, hole]),
+        3: G.wkb_multipolygon([[shell, hole], [part2]]),
+        4: struct.pack("<BII", 1, 3, 0),  # POLYGON EMPTY
+    }
+    others = {
+        5: G.wkb_linestring(shell[:3]),
+        6: G.wkb_point(1.0, 2.0),
+    }
+    df = spark.createDataFrame(
+        [(i, bytearray(b)) for i, b in {**polygons, **others}.items()],
+        "id long, geometry binary",
+    ).withColumn("_segsets", wkb_segment_sets(F.col("geometry")))
+    rows = {r["id"]: r for r in df.select(
+        "id", segsets_bbox().alias("seg"),
+        wkb_bbox(F.col("geometry")).alias("wkb")).collect()}
+    for i in polygons:
+        assert rows[i]["seg"].asDict() == rows[i]["wkb"].asDict(), i
+    assert rows[3]["seg"].asDict() == {
+        "xmin": 0.0, "ymin": -3.0, "xmax": 22.0, "ymax": 22.0}
+    assert rows[4]["seg"]["xmin"] is None
+    for i in others:
+        assert rows[i]["wkb"]["xmin"] is not None, i
+        assert all(v is None for v in rows[i]["seg"]), i
+    covered = {r["id"] for r in polygon_cover(df, 8).select("id").collect()}
+    assert covered == {1, 2, 3}
+
+
 def test_raster_polygon_join_custom_cell_col(spark, images, buildings):
     """cell_col other than 'cell' must work — the cover side renames
     its join key to match."""
