@@ -13,9 +13,8 @@ A from-scratch rebuild of the query capabilities of pyrosm/pyrosm
   (``functions.tiles``, ``operators.spatial_join``)
 * image-payload plumbing (decode / phash / PSNR) as Arrow-batched pandas
   UDFs (``functions.image_np``, ``operators.multimodal``)
-* training-data pipeline ops: dedup (exact / minhash-LSH / simhash /
-  ngram-jaccard / embedding-cosine), ANN similarity search, text analysis
-  (``operators.dedup``, ``operators.similarity``, ``operators.text``)
+* embedding similarity search: exact cosine top-k, LSH / IVF / IVF-PQ
+  ANN (``operators.similarity``)
 * checkpoint / lineage manifests for resumable multi-stage jobs
   (``plans.checkpoint``)
 

@@ -35,7 +35,7 @@ def _default_synth_dir() -> str:
     """Writable materialization dir. ``PYROSM_SPARK_DATA_DIR`` wins;
     otherwise ``<repo>/data/synth`` when the package runs from a
     SOURCE CHECKOUT — identified by a repo marker (``.git`` /
-    ``bench.py`` next to the package), not by ``os.path.isdir`` alone:
+    ``perfbench`` next to the package), not by ``os.path.isdir`` alone:
     for a pip-installed package three dirnames above ``__file__`` is
     ``site-packages`` (a real, sometimes root-owned directory), and
     for ``spark-submit --py-files pyrosm_spark.zip`` it is inside the
@@ -46,7 +46,7 @@ def _default_synth_dir() -> str:
     repo = os.path.dirname(os.path.dirname(os.path.dirname(
         os.path.abspath(__file__))))
     if any(os.path.exists(os.path.join(repo, m))
-           for m in (".git", "bench.py")):
+           for m in (".git", "perfbench")):
         return os.path.join(repo, "data", "synth")
     import getpass
     import tempfile

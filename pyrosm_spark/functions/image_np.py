@@ -227,95 +227,3 @@ def synth_pixels(seed: int, w: int, h: int) -> np.ndarray:
     # to all-pairs (real photos have texture; the synth must too)
     noise = rng.integers(-40, 41, px.shape, dtype=np.int16)
     return np.clip(px + noise, 0, 255).astype(np.uint8)
-
-
-# --------------------------------------------------------------------------
-# vid1 — deterministic synthetic video container (frame-sampling target)
-# --------------------------------------------------------------------------
-#
-# Real-world video needs an ffmpeg/pyav build this container lacks; the
-# engine's frame-sampling PLUMBING (schema, partitioning, batch shape)
-# is format-agnostic, so it is exercised against this self-contained
-# container: a header + length-prefixed qimg frames. Random access per
-# frame = one offset walk, no full decode.
-
-_VID_MAGIC = b"VID1"
-
-
-def encode_vid(frames: list, fps: int = 10) -> bytes:
-    """Container: magic | u16 n_frames | u16 fps | (u32 len + qimg)*."""
-    payloads = [encode_qimg(f) for f in frames]
-    head = _VID_MAGIC + struct.pack("<HH", len(payloads), fps)
-    body = b"".join(struct.pack("<I", len(p)) + p for p in payloads)
-    return head + body
-
-
-# magics of real containers we RECOGNIZE but cannot decode here —
-# these get NotImplementedError (a missing capability), everything
-# else is malformed data and gets ValueError like the sibling
-# decoders, so per-row 'except ValueError' skip loops behave uniformly
-_KNOWN_VIDEO_CONTAINERS = (
-    (b"ftyp", 4, "mp4/mov"),        # ISO BMFF: 'ftyp' at offset 4
-    (b"RIFF", 0, "avi"),
-    (b"\x1aE\xdf\xa3", 0, "mkv/webm"),  # EBML header
-)
-
-
-def vid_info(buf: bytes):
-    """(n_frames, fps).
-
-    Raises NotImplementedError for a *recognized* real container
-    (mp4/avi/mkv — needs an ffmpeg/pyav build absent from this
-    environment) and ValueError for malformed/truncated payloads, the
-    same contract as :func:`decode_png`/:func:`decode_qimg` so
-    bad-row skip loops catch one exception type."""
-    if buf[:4] != _VID_MAGIC:
-        for magic, off, name in _KNOWN_VIDEO_CONTAINERS:
-            if buf[off:off + len(magic)] == magic:
-                raise NotImplementedError(
-                    f"{name} container decode needs an ffmpeg/pyav "
-                    f"build absent from this environment")
-        raise ValueError("not a vid1 payload")
-    if len(buf) < 8:
-        raise ValueError("truncated vid1 header")
-    n, fps = struct.unpack_from("<HH", buf, 4)
-    return n, fps
-
-
-def vid_frame_offsets(buf: bytes) -> list:
-    """Byte offset of each frame payload — ONE container walk, so a
-    caller sampling many frames pays O(n) total, not O(n²)."""
-    n, _ = vid_info(buf)
-    offs, off = [], 8
-    for _i in range(n):
-        (ln,) = struct.unpack_from("<I", buf, off)
-        offs.append(off)
-        off += 4 + ln
-    return offs
-
-
-def decode_vid_frame(buf: bytes, idx: int,
-                     offsets: list | None = None) -> np.ndarray:
-    """Random-access decode of frame ``idx``; pass ``offsets`` from
-    :func:`vid_frame_offsets` to skip the per-call offset walk."""
-    n, _ = vid_info(buf)
-    if not 0 <= idx < n:
-        raise IndexError(f"frame {idx} out of range 0..{n - 1}")
-    if offsets is not None:
-        off = offsets[idx]
-    else:
-        off = 8
-        for _i in range(idx):
-            (ln,) = struct.unpack_from("<I", buf, off)
-            off += 4 + ln
-    (ln,) = struct.unpack_from("<I", buf, off)
-    return decode_qimg(buf[off + 4:off + 4 + ln])
-
-
-def synth_video(seed: int, w: int, h: int, n_frames: int,
-                fps: int = 10) -> bytes:
-    """Deterministic test video: per-frame synth_pixels with a seed
-    offset so consecutive frames differ."""
-    return encode_vid(
-        [synth_pixels(seed * 1009 + i, w, h) for i in range(n_frames)],
-        fps=fps)

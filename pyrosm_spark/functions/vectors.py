@@ -1,5 +1,5 @@
-"""Native vector expressions shared by the similarity and dedup
-operators. Pure Column builders — zip_with/aggregate stay inside
+"""Native vector expressions shared by the similarity operators.
+Pure Column builders — zip_with/aggregate stay inside
 whole-stage codegen (no Python per row)."""
 
 from __future__ import annotations

@@ -419,6 +419,9 @@ def label_chains(seg: DataFrame) -> DataFrame:
     )
 
 
+_MAX_DEPTH = 4  # connected_components recursion levels below the call
+
+
 def connected_components(edges: DataFrame, u_col: str = "u",
                          v_col: str = "v",
                          contraction_rounds: int = 6,
@@ -448,7 +451,7 @@ def connected_components(edges: DataFrame, u_col: str = "u",
     the engine — the planetary-scale guard. All data-side work is
     plain joins/groupBys.
     """
-    from pyrosm_spark.operators.dedup import _pin_fresh
+    from pyrosm_spark.operators.spatial_join import _pin_fresh, _release_pins
 
     nshuf = int(edges.sparkSession.conf.get(
         "spark.sql.shuffle.partitions", "32"))
@@ -465,12 +468,16 @@ def connected_components(edges: DataFrame, u_col: str = "u",
     # localCheckpoint partition fails the job. The per-round LABELS
     # frames keep localCheckpoint — they need lineage TRUNCATION
     # (the iterated plan would grow per round), which persist does not
-    # provide. Recursion safety: _pin_fresh releases the OUTER call's
-    # und pin, but the recursive branch only runs when
-    # contraction_rounds > 0, where every outer frame still needed
-    # (labels, sup) is already checkpointed.
+    # provide. The pin tag carries the recursion depth: a recursive
+    # call must not release this call's und, which the final
+    # labels.join(mapping) still reads when contraction_rounds == 0
+    # leaves labels un-checkpointed. A new top-level call releases
+    # every level of the previous call's recursion.
+    if _depth == 0:
+        for d in range(1, _MAX_DEPTH + 1):
+            _release_pins(f"cc_und_{d}")
     und = _pin_fresh(
-        "cc_und",
+        f"cc_und_{_depth}",
         edges.select(F.col(u_col).alias("a"), F.col(v_col).alias("b"))
         .unionAll(edges.select(F.col(v_col).alias("a"),
                                F.col(u_col).alias("b")))
@@ -509,7 +516,7 @@ def connected_components(edges: DataFrame, u_col: str = "u",
         .select("ca", "cb").distinct().localCheckpoint()
     )
     n_sup = sup.count()
-    if _depth < 4 and n_sup > max_driver_edges:
+    if _depth < _MAX_DEPTH and n_sup > max_driver_edges:
         # still too big for the driver: recurse on the super-graph
         # (labels are nodes), then broadcast the label -> root map back
         sub = connected_components(
@@ -551,8 +558,8 @@ def connected_components(edges: DataFrame, u_col: str = "u",
     if not roots:
         return labels
     spark = edges.sparkSession
-    # the label type follows the node-id type (string image ids for the
-    # phash/near-dup pair sets, longs for OSM) — never hardcode long
+    # the label type follows the node-id type (strings for string ids,
+    # longs for OSM) — never hardcode long
     comp_type = labels.schema["comp"].dataType
     mapping = spark.createDataFrame(
         [(k, v) for k, v in roots.items()],

@@ -1,5 +1,5 @@
-"""Multimodal (image payload) operators: decode / verify / feature
-extraction / resize over the binary ``bytes`` column.
+"""Image payload operators: decode / verify / feature extraction over
+the binary ``bytes`` column.
 
 The Spark-side plumbing — schema, Arrow batch shape, mapInPandas
 iterator, partition sizing — is real and tested; the codec layer is
@@ -12,7 +12,6 @@ from __future__ import annotations
 
 from collections.abc import Iterator
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -68,153 +67,3 @@ def decode_features(images: DataFrame, sample_ratio: float = 1.0) -> DataFrame:
         mod = max(int(1.0 / sample_ratio), 1)
         src = src.filter(F.pmod(F.xxhash64("image_id"), F.lit(mod)) == 0)
     return src.mapInPandas(batch_fn, schema=FEATURE_SCHEMA)
-
-
-RESIZE_SCHEMA = "image_id string, bytes binary, w int, h int, fmt string"
-
-
-def resize_images(images: DataFrame, out_w: int = 8, out_h: int = 8) -> DataFrame:
-    """Block-mean resize of every decodable payload, re-encoded as PNG —
-    a real transform pipeline (decode -> numpy -> encode) exercising the
-    full binary-in/binary-out UDF shape used for thumbnailing at scale."""
-
-    def batch_fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                if r.bytes is None:
-                    continue
-                try:
-                    px = I.decode_image(bytes(r.bytes), r.fmt)
-                except Exception:  # undecodable -> no thumbnail row
-                    continue
-                ys = (np.arange(out_h + 1) * px.shape[0]) // out_h
-                xs = (np.arange(out_w + 1) * px.shape[1]) // out_w
-                small = np.zeros((out_h, out_w, 3), dtype=np.uint8)
-                for i in range(out_h):
-                    for j in range(out_w):
-                        block = px[ys[i]:max(ys[i + 1], ys[i] + 1),
-                                   xs[j]:max(xs[j + 1], xs[j] + 1)]
-                        small[i, j] = block.reshape(-1, 3).mean(axis=0)
-                rows.append((r.image_id, I.encode_png(small), out_w, out_h,
-                             "png"))
-            yield pd.DataFrame(rows, columns=["image_id", "bytes", "w", "h",
-                                              "fmt"])
-
-    return images.select("image_id", "bytes", "fmt").mapInPandas(
-        batch_fn, schema=RESIZE_SCHEMA
-    )
-
-
-FRAME_SAMPLE_SCHEMA = (
-    "video_id string, frame_idx int, ok boolean, err string, "
-    "w int, h int, phash long"
-)
-
-
-def frame_sample(videos: DataFrame, every_n: int = 10,
-                 id_col: str = "video_id",
-                 bytes_col: str = "bytes") -> DataFrame:
-    """Sample every ``every_n``-th frame of each video payload and emit
-    one row per sampled frame (index, shape, perceptual hash) —
-    mapInPandas, binary in / struct rows out, the decode_features
-    plumbing applied to the temporal axis. Decodes the deterministic
-    ``vid1`` container for real (random-access per frame);
-    unsupported real-world containers (mp4 etc., which need an
-    ffmpeg/pyav build this environment lacks) degrade into per-row
-    ``err`` records instead of failing the job — the same container-
-    constraint boundary as jpeg/compressed audio."""
-    def batch_fn(it):
-        from pyrosm_spark.functions import image_np as I
-
-        for pdf in it:
-            rows = []
-            for r in pdf.itertuples():
-                vid = getattr(r, id_col)
-                raw = getattr(r, bytes_col)
-                try:
-                    if raw is None:
-                        raise ValueError("null video payload")
-                    buf = bytes(raw)
-                    n, _fps = I.vid_info(buf)
-                    offs = I.vid_frame_offsets(buf)
-                    for idx in range(0, n, max(every_n, 1)):
-                        px = I.decode_vid_frame(buf, idx, offsets=offs)
-                        rows.append((vid, idx, True, None,
-                                     px.shape[1], px.shape[0],
-                                     I.phash64(px)))
-                except Exception as e:  # degrade per row, never fail
-                    rows.append((vid, -1, False,
-                                 f"{type(e).__name__}: {e}", None, None,
-                                 None))
-            yield pd.DataFrame(rows, columns=[
-                "video_id", "frame_idx", "ok", "err", "w", "h", "phash"])
-
-    return videos.select(
-        F.col(id_col).alias(id_col), F.col(bytes_col).alias(bytes_col)
-    ).mapInPandas(batch_fn, schema=FRAME_SAMPLE_SCHEMA)
-
-
-# --------------------------------------------------------------------------
-# Audio modality (same plumbing contract; pcm16 decodes for real)
-# --------------------------------------------------------------------------
-
-AUDIO_FEATURE_SCHEMA = (
-    "audio_id string, ok boolean, err string, n_samples int, "
-    "duration_ms_computed int, rms double, zcr double, peak double, "
-    "duration_match boolean"
-)
-
-
-def audio_features(audio: DataFrame) -> DataFrame:
-    """Decode every audio payload and emit per-clip features + the
-    metadata invariant (computed duration == recorded duration_ms).
-
-    Input schema: (audio_id string, bytes binary, sample_rate int,
-    n_channels int, fmt string, duration_ms int). ``pcm16`` rows decode
-    with numpy (functions.audio_np); compressed rows surface their
-    NotImplementedError in the ``err`` column instead of failing the
-    job — the decode swap point for a real codec on a cluster.
-    """
-    from pyrosm_spark.functions import audio_np as A
-
-    def batch_fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                try:
-                    if r.bytes is None:
-                        raise ValueError("null audio payload")
-                    wave = A.decode_audio(bytes(r.bytes), r.fmt,
-                                          r.n_channels)
-                    n = len(wave)
-                    try:
-                        rate = int(r.sample_rate)
-                    except (TypeError, ValueError):
-                        rate = 0
-                    if rate <= 0:  # null/zero metadata — poison row,
-                        # not a ZeroDivisionError that fails the task
-                        raise ValueError(
-                            f"invalid sample_rate {r.sample_rate!r}")
-                    dur = int(round(n * 1000.0 / rate))
-                    rows.append((r.audio_id, True, None, n, dur,
-                                 round(A.rms_energy(wave), 6),
-                                 round(A.zero_crossing_rate(wave), 6),
-                                 round(A.peak_amplitude(wave), 6),
-                                 dur == r.duration_ms))
-                except (NotImplementedError, ValueError, TypeError) as e:
-                    # ValueError = malformed payload (odd byte count,
-                    # channel mismatch); TypeError = null metadata
-                    # (sample_rate / n_channels) — poison rows land in
-                    # `err`, never fail the job
-                    rows.append((r.audio_id, False, str(e), None, None,
-                                 None, None, None, None))
-            yield pd.DataFrame(rows, columns=[
-                "audio_id", "ok", "err", "n_samples",
-                "duration_ms_computed", "rms", "zcr", "peak",
-                "duration_match"])
-
-    cols = ["audio_id", "bytes", "sample_rate", "n_channels", "fmt",
-            "duration_ms"]
-    return audio.select(*cols).mapInPandas(batch_fn,
-                                           schema=AUDIO_FEATURE_SCHEMA)

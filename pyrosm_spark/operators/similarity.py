@@ -47,7 +47,7 @@ def cosine_topk(
     Python); ranking is one window. The query side is broadcast so the
     corpus never shuffles — scan-shaped at any corpus size.
     """
-    # zero-norm guard (mirrors lsh_cosine_pairs / dedup): a zero
+    # zero-norm guard (mirrors the pair operators below): a zero
     # vector's cosine is 0/0 = NaN, and Spark orders NaN ABOVE every
     # double in the rank window — one all-zero corpus embedding would
     # take rank 1 for EVERY query, displacing a real neighbor
@@ -836,6 +836,77 @@ def ann_ivfpq_sql(parquet_path: str, table: str = "embeddings",
     """
 
 
+# --------------------------------------------------------------------------
+# Embedding-cosine near-dup pairs (exact baseline + the oracle-checked form)
+# --------------------------------------------------------------------------
+
+def embedding_cosine_pairs(emb: DataFrame, threshold: float = 0.95,
+                           id_col: str = "vec_id",
+                           vec_col: str = "embedding",
+                           max_rows: int | None = 200_000) -> DataFrame:
+    """Exact all-pairs cosine >= threshold. Join-on-inequality (id<id)
+    — the correctness baseline; the scale path buckets by hyperplane
+    LSH first (see ``lsh_cosine_pairs``). Dot/norm stay native
+    (zip_with + aggregate = JVM codegen).
+
+    SIZE-GATED: the O(n²) theta join is an oracle anchor, not a path a
+    pipeline should reach at scale — above ``max_rows`` input rows it
+    raises and points at ``lsh_cosine_pairs`` (bucketed
+    candidates + exact refine, same pair semantics). Pass
+    ``max_rows=None`` to bypass the gate deliberately."""
+    if max_rows is not None:
+        n = emb.count()
+        if n > max_rows:
+            raise ValueError(
+                f"embedding_cosine_pairs is the exact O(n^2) baseline "
+                f"({n} rows > max_rows={max_rows}); use "
+                f"similarity.lsh_cosine_pairs for the bucketed scale "
+                f"path, or pass max_rows=None to force the all-pairs "
+                f"join.")
+    v = emb.select(
+        F.col(id_col).alias("vid"),
+        F.col(vec_col).cast("array<double>").alias("vec"),
+    ).withColumn("norm", F.sqrt(_dot(F.col("vec"), F.col("vec"))))
+    # zero-norm guard: cosine would be 0/0 = NaN, and Spark's ordering
+    # semantics treat NaN as GREATER than any double — one all-zero
+    # embedding (a failed embed call) would otherwise pair with every
+    # row and collapse the corpus into one near-dup cluster
+    v = v.filter(F.col("norm") > 0)
+    a, b = v.alias("a"), v.alias("b")
+    return (
+        a.join(b, F.col("a.vid") < F.col("b.vid"))
+        .select(
+            F.col("a.vid").alias("id_a"), F.col("b.vid").alias("id_b"),
+            F.round(
+                _dot(F.col("a.vec"), F.col("b.vec"))
+                / (F.col("a.norm") * F.col("b.norm")), 6,
+            ).alias("cosine"),
+        )
+        .filter(F.col("cosine") >= threshold)
+    )
+
+
+def embedding_cosine_sql(table: str = "embeddings",
+                         threshold: float = 0.95) -> str:
+    """Mirror of ``embedding_cosine_pairs``: same zero-norm exclusion,
+    and the threshold tests the ROUNDED cosine exactly as the engine
+    filters its round(..., 6) column."""
+    cos = (
+        "list_cosine_similarity(CAST(a.embedding AS DOUBLE[]), "
+        "CAST(b.embedding AS DOUBLE[]))"
+    )
+    def norm2(side: str) -> str:
+        return (f"list_dot_product(CAST({side}.embedding AS DOUBLE[]), "
+                f"CAST({side}.embedding AS DOUBLE[]))")
+    return f"""
+        SELECT a.vec_id AS id_a, b.vec_id AS id_b,
+               round({cos}, 6) AS cosine
+        FROM {table} a JOIN {table} b ON a.vec_id < b.vec_id
+        WHERE {norm2('a')} > 0 AND {norm2('b')} > 0
+          AND round({cos}, 6) >= {threshold}
+    """
+
+
 def lsh_cosine_pairs(
     emb: DataFrame,
     threshold: float = 0.9,
@@ -846,7 +917,7 @@ def lsh_cosine_pairs(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Embedding near-dup PAIRS via hyperplane-LSH bucketing — the
-    scale path that replaces ``dedup.embedding_cosine_pairs``' exact
+    scale path that replaces ``embedding_cosine_pairs``' exact
     all-pairs baseline: candidates are pairs sharing >= 1 of the
     ``n_tables`` sign-hash buckets (equi-join shaped, skew-safe under
     AQE), exact cosine runs only on candidates. Recall is governed by
@@ -857,7 +928,7 @@ def lsh_cosine_pairs(
     Plan shape (candidate-then-gather): the Arrow bucket UDF runs ONCE
     into a pinned (vid, bucket) frame partitioned by bucket — the
     bucket self-join reads the cached layout exchange-free (eager
-    materialization; see dedup.banded_self_pairs) and shuffles only
+    materialization) and shuffles only
     id+bucket rows, never vectors. Candidate pairs dedupe narrow, and
     the two vector gathers join by id afterwards. The previous
     formulation ran the UDF once PER JOIN SIDE and carried both full
@@ -868,14 +939,14 @@ def lsh_cosine_pairs(
     shuffle-byte cut (~vec_bytes/bucket_row_bytes, ~16x for 64-dim
     doubles) on the corpus-x-tables frame, which dominates at real
     corpus sizes."""
-    from pyrosm_spark.operators.dedup import _pin_fresh
+    from pyrosm_spark.operators.spatial_join import _pin_fresh
 
     bucket = make_bucket_udf(dim, n_planes, n_tables)
     b = emb.select(
         F.col(id_col).alias("vid"),
         F.col(vec_col).cast("array<double>").alias("vec"),
     )
-    # zero-norm guard (mirrors dedup.embedding_cosine_pairs): a zero
+    # zero-norm guard (mirrors embedding_cosine_pairs): a zero
     # vector's cosine is 0/0 = NaN, which Spark orders ABOVE every
     # double, so it would pass any >= threshold filter and pair with
     # its whole bucket

@@ -72,6 +72,16 @@ def _release_pins(tag: str) -> None:
             pass  # session may already be stopped
 
 
+def _pin_fresh(tag: str, df: DataFrame) -> DataFrame:
+    """Release the previous call's pin for ``tag``, then pin ``df``:
+    the lifecycle for a multiply-consumed subtree that one call owns.
+    Unlike ``localCheckpoint()`` it frees storage when the next call
+    begins, and a lost executor recomputes the deterministic lineage
+    instead of failing the job."""
+    _release_pins(tag)
+    return _pin(tag, df)
+
+
 # Cross-call reuse of pinned DIM-side derivations: {tag: (key, src_df,
 # pinned_df)}. A repeated operator call whose dim side is semantically
 # identical (same logical plan) reuses the already-pinned derivation

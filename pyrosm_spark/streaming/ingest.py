@@ -3,12 +3,12 @@
 The reference is batch-only (SURVEY.md §2.10); its decode->spill->
 collect pipeline is a one-shot map/shuffle/reduce and its result cache
 plays the incremental role. Streaming here is therefore an *extension*:
-the same tile-assignment and windowed-aggregation operators applied to
-an unbounded source (file stream locally; Kafka on a real cluster) —
-useful for continuous image ingest feeding the tiling layer.
+the same tile-assignment, cell-count and point-in-polygon operators
+applied to an unbounded source (file stream locally; Kafka on a real
+cluster) — useful for continuous image ingest feeding the tiling layer.
 
 Every transformation below reuses the exact batch Column expressions
-(tiles.cell_id, event aggregations), so batch/stream parity is by
+(tiles.cell_id, the batch PIP join), so batch/stream parity is by
 construction, and each is covered by a memory-sink test that compares
 against the batch run of the same input.
 """
@@ -25,15 +25,6 @@ from pyrosm_spark.functions import tiles
 
 # unique pin tag per streaming_pip_join call (see its docstring)
 _STREAM_PIP_SEQ = itertools.count()
-
-EVENTS_SCHEMA = T.StructType([
-    T.StructField("event_id", T.LongType()),
-    T.StructField("ts", T.TimestampType()),
-    T.StructField("user_id", T.LongType()),
-    T.StructField("event_type", T.StringType()),
-    T.StructField("value", T.DoubleType()),
-    T.StructField("props", T.StringType()),
-])
 
 IMAGES_SCHEMA = T.StructType([
     T.StructField("image_id", T.StringType()),
@@ -92,30 +83,9 @@ def _file_stream(spark, schema, path: str, max_files_per_trigger: int):
     )
 
 
-def read_events_stream(spark: SparkSession, path: str,
-                       max_files_per_trigger: int = 4) -> DataFrame:
-    return _file_stream(spark, EVENTS_SCHEMA, path, max_files_per_trigger)
-
-
 def read_images_stream(spark: SparkSession, path: str,
                        max_files_per_trigger: int = 4) -> DataFrame:
     return _file_stream(spark, IMAGES_SCHEMA, path, max_files_per_trigger)
-
-
-def windowed_event_counts(events: DataFrame, window: str = "5 minutes",
-                          watermark: str = "10 minutes") -> DataFrame:
-    """Watermarked tumbling-window aggregation (late rows beyond the
-    watermark are dropped) — works identically on batch DataFrames."""
-    src = events.withWatermark("ts", watermark) if events.isStreaming \
-        else events
-    return (
-        src.groupBy(F.window("ts", window).alias("win"), "event_type")
-        .agg(F.count("*").alias("n"), F.round(F.sum("value"), 6).alias("v"))
-        .select(
-            F.date_format("win.start", "yyyy-MM-dd HH:mm:ss").alias("win_start"),
-            "event_type", "n", "v",
-        )
-    )
 
 
 def streaming_tile_assignment(images: DataFrame, res: int = 15) -> DataFrame:
@@ -161,50 +131,6 @@ def stateful_cell_counts(images: DataFrame, res: int = 12) -> DataFrame:
         outputMode="update",
         timeoutConf="NoTimeout",
     )
-
-
-def streaming_exact_dedup(images: DataFrame, event_time_col: str = None,
-                          watermark: str = "1 hour") -> DataFrame:
-    """Streaming exact dedup on content identity: keep the first
-    arrival per (phash, w, h) content key, drop later duplicates.
-
-    The batch analogue is ``dedup.exact_dedup``'s canonical-id
-    selection; on a stream, "minimum id" is undefined over an unbounded
-    input, so the streaming contract is FIRST-ARRIVAL-WINS — the
-    standard ingestion-dedup shape. State is bounded by the watermark
-    when an event-time column is supplied
-    (``dropDuplicatesWithinWatermark``: duplicates are only tracked
-    inside the watermark horizon — at 10^12 rows unbounded dedup state
-    is not an option); without one, state grows with distinct keys
-    (dev/test mode).
-    """
-    # Key ladder, most- to least-specific, all NULL-safe:
-    #   1. (phash, w, h) with explicit null markers — concat_ws would
-    #      silently DROP a NULL w/h and collide rows with different
-    #      (unknown) dimensions;
-    #   2. md5(bytes) — content identity straight from the payload;
-    #   3. the row's own id (unknown content must never dedupe against
-    #      other unknown content);
-    #   4. uuid() — a row with nothing known keeps itself (a NULL key
-    #      would make ALL such rows dedupe into one).
-    def _ns(c):  # null-safe string part ('\0' cannot be a real value)
-        return F.coalesce(F.col(c).cast("string"), F.lit("\x00"))
-
-    keyed = images.withColumn(
-        "content_key",
-        F.when(F.col("phash").isNotNull(),
-               F.concat_ws(":", F.lit("p"), _ns("phash"), _ns("w"),
-                           _ns("h")))
-        .when(F.col("bytes").isNotNull(),
-              F.concat(F.lit("b:"), F.md5(F.col("bytes"))))
-        .when(F.col("image_id").isNotNull(),
-              F.concat(F.lit("id:"), F.col("image_id")))
-        .otherwise(F.concat(F.lit("u:"), F.expr("uuid()"))))
-    if event_time_col is not None:
-        return keyed.withWatermark(
-            event_time_col, watermark
-        ).dropDuplicatesWithinWatermark(["content_key"])
-    return keyed.dropDuplicates(["content_key"])
 
 
 def run_to_memory(stream_df: DataFrame, name: str,

@@ -9,8 +9,5 @@ tests exercise; ``images.py`` builds the image+caption payload table
 from pyrosm_spark.synth.osm import generate_osm_tables, ensure_osm_tables  # noqa: F401
 from pyrosm_spark.synth.images import (  # noqa: F401
     ensure_images_table,
-    ensure_videos_table,
     generate_images_table,
-    generate_videos_table,
 )
-from pyrosm_spark.synth.audio import generate_audio_table, ensure_audio_table  # noqa: F401

@@ -135,7 +135,7 @@ def generate_images_table(
         )
 
     d = os.path.dirname(out_path)
-    if d:  # bare relative filename has no dir component (audio.py too)
+    if d:  # bare relative filename has no dir component
         os.makedirs(d, exist_ok=True)
     if rows_per_file and n_rows > rows_per_file:
         # multi-file layout: input splits for free (a single big file
@@ -173,61 +173,3 @@ def ensure_images_table(out_path: str, n_rows: int = 2000, **kw) -> str:
     if os.path.exists(out_path):
         return out_path
     return generate_images_table(out_path, n_rows=n_rows, **kw)
-
-
-def generate_videos_table(out_path: str, n_rows: int = 50,
-                          seed: int = 42) -> str:
-    """Deterministic videos table (vid1 container): columns
-    (video_id, bytes, w, h, n_frames, fps, frame_phashes, caption).
-    ``frame_phashes`` holds every DECODED frame's phash computed
-    generator-side — the independent reference the engine's
-    frame_sample value-checks against (the image table's phash
-    contract extended to the temporal axis). Small by design — video
-    payloads exercise the frame-sampling plumbing, not bench volume."""
-    from pyrosm_spark.functions.image_np import (
-        decode_vid_frame,
-        phash64,
-        synth_video,
-        vid_info,
-    )
-
-    rng = np.random.default_rng(seed + 77)
-    ids, blobs, ws, hs, nfs, fpss, caps = [], [], [], [], [], [], []
-    fphs = []
-    for i in range(n_rows):
-        w = int(rng.integers(8, 24))
-        h = int(rng.integers(8, 24))
-        nf = int(rng.integers(2, 12))
-        fps = int(rng.choice([5, 10, 24]))
-        blob = synth_video(seed * 31 + i, w, h, nf, fps=fps)
-        assert vid_info(blob) == (nf, fps)
-        ids.append(f"vid{i:06d}")
-        blobs.append(blob)
-        fphs.append([phash64(decode_vid_frame(blob, j))
-                     for j in range(nf)])
-        ws.append(w)
-        hs.append(h)
-        nfs.append(nf)
-        fpss.append(fps)
-        caps.append(f"synthetic clip {i} ({nf} frames @ {fps} fps)")
-    table = pa.table({
-        "video_id": pa.array(ids, pa.string()),
-        "bytes": pa.array(blobs, pa.binary()),
-        "w": pa.array(ws, pa.int32()),
-        "h": pa.array(hs, pa.int32()),
-        "n_frames": pa.array(nfs, pa.int32()),
-        "fps": pa.array(fpss, pa.int32()),
-        "frame_phashes": pa.array(fphs, pa.list_(pa.int64())),
-        "caption": pa.array(caps, pa.string()),
-    })
-    d = os.path.dirname(out_path)
-    if d:  # bare relative filename has no dir component (audio.py too)
-        os.makedirs(d, exist_ok=True)
-    pq.write_table(table, out_path)
-    return out_path
-
-
-def ensure_videos_table(out_path: str, n_rows: int = 50, **kw) -> str:
-    if os.path.exists(out_path):
-        return out_path
-    return generate_videos_table(out_path, n_rows=n_rows, **kw)

@@ -1,5 +1,9 @@
 """Physical-plan audit: verify the plans are the ones we want.
 
+Runs under the engine's own session conf (``get_spark``, AQE on) and
+audits the FINAL adaptive plan of each query: every audited query runs
+once, at the committed synthetic world's size, before its plan is read.
+
 Checks, per key query:
 * parquet scans carry PushedFilters / pruned ReadSchema where expected
 * small dimension sides broadcast (BroadcastHashJoin)
@@ -13,14 +17,16 @@ Prints one line per check; exits non-zero on violations.
 from __future__ import annotations
 
 import os
+import shutil
 import sys
+import tempfile
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-import __spark_entry__ as em  # noqa: E402
 from pyrosm_spark.session import get_spark  # noqa: E402
+from tests.paper_queries import QUERIES, SYNTH_DIR, World  # noqa: E402
 
 FAILS = []
 
@@ -33,7 +39,14 @@ def check(name, cond, detail=""):
 
 
 def plan_of(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
+    """Run ``df`` and return its final adaptive plan (the ``Final
+    Plan`` section; the whole plan when AQE did not wrap it)."""
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    if "== Final Plan ==" in plan:
+        plan = plan.split("== Final Plan ==", 1)[1]
+        plan = plan.split("== Initial Plan ==", 1)[0]
+    return plan
 
 
 def path_to_join(plan: str, scan_substr: str) -> list:
@@ -58,36 +71,22 @@ def path_to_join(plan: str, scan_substr: str) -> list:
     return path
 
 
-def simple_plan(df) -> str:
-    return df._jdf.queryExecution().simpleString()
-
-
 def main():
-    # AQE wraps plans in AdaptiveSparkPlan whose string hides codegen
-    # markers — disable it for the AUDIT session only (engine sessions
-    # keep AQE on), and tell the entry's defensive _tuned wrapper to
-    # leave this session's conf alone.
-    os.environ["SPARK_GRAFT_NO_TUNE"] = "1"
-    spark = get_spark("plan_audit", master="local[8]", shuffle_partitions=16,
-                      extra_conf={"spark.sql.adaptive.enabled": "false"})
-    sf = "/root/testdata/sf0.01"
-    qs = em.queries()
+    spark = get_spark("plan_audit")
+    world = World(spark, tempfile.mkdtemp(prefix="plan_audit_"))
 
     # 1. pure-SQL queries: zero Python nodes, codegen present
     for name in ("network_driving_edges", "tile_assignment", "tile_counts",
-                 "tpch_q1_pricing", "events_hourly", "minhash_signatures",
-                 "exact_dedup", "pip_bbox_join", "knn_images_pois"):
-        df = qs[name](spark, sf)
-        p = plan_of(df)
+                 "pip_bbox_join", "knn_images_pois"):
+        p = plan_of(QUERIES[name](world))
         check(f"{name}: no Python in plan",
               "ArrowEvalPython" not in p and "MapInPandas" not in p
               and "BatchEvalPython" not in p)
-        # with AQE the executed-plan string shows codegen stages as "*(n)"
-        check(f"{name}: whole-stage codegen", "*(" in p or "WholeStageCodegen" in p)
+        check(f"{name}: whole-stage codegen", "*(" in p)
 
     # 2. scan pruning: engine loader projects only engine columns
     from pyrosm_spark.operators.osm_source import load_osm
-    nodes, ways, _ = load_osm(spark, em.SYNTH_DIR)
+    nodes, ways, _ = load_osm(spark, SYNTH_DIR)
     p = plan_of(nodes.select("id", "lon", "lat"))
     check("node scan: ReadSchema pruned to selected columns",
           "amenity" not in p.split("ReadSchema")[-1][:400])
@@ -99,14 +98,10 @@ def main():
           "PushedFilters" in p and "lon" in p.split("PushedFilters")[-1][:200],
           )
 
-    # 4. broadcast: revenue_by_nation must broadcast nation
-    p = plan_of(qs["revenue_by_nation"](spark, sf))
-    check("revenue_by_nation: BroadcastHashJoin", "BroadcastHashJoin" in p)
-
     # 5. PIP join: the refine is NATIVE (exists/aggregate ray cast in
     # codegen) — no per-candidate Python; the only polygon-side Arrow
     # step is the once-per-polygon segment decode. Join is hash join.
-    j = qs["pip_exact_join"](spark, sf)
+    j = QUERIES["pip_exact_join"](world)
     p = plan_of(j)
     check("pip_exact: no per-candidate Python refine",
           "point_in_wkb_polygon" not in p,
@@ -121,7 +116,7 @@ def main():
     # 5b. raster-tile <-> polygon join: same native-refine discipline
     # as PIP — the only Arrow node is the once-per-polygon segment
     # decode; the edge/corner/containment test stays in codegen
-    j = qs["raster_polygon_join"](spark, sf)
+    j = QUERIES["raster_polygon_join"](world)
     p = plan_of(j)
     check("raster_polygon: no per-candidate Python refine",
           "point_in_wkb_polygon" not in p,
@@ -134,7 +129,7 @@ def main():
     # 5c. Z-order layout: the bbox scan's Morton ranges reach the
     # parquet reader as pushed int64 filters (row-group stats pruning)
     # and the plan holds zero Python nodes
-    p = plan_of(qs["zorder_pruned_scan"](spark, sf))
+    p = plan_of(QUERIES["zorder_pruned_scan"](world))
     check("zorder scan: Morton ranges in PushedFilters",
           "PushedFilters" in p and "_zkey" in p.split("PushedFilters")[-1][:400])
     check("zorder scan: no Python in plan",
@@ -148,7 +143,7 @@ def main():
     # puts the synthetic tables in the second regime.
     from pyrosm_spark.functions.filters import element_filter_column
     from pyrosm_spark.operators.relations import assemble_relations
-    _, w2, r2 = load_osm(spark, em.SYNTH_DIR)
+    _, w2, r2 = load_osm(spark, SYNTH_DIR)
     pred = element_filter_column(F.col("tags"), {"building": True})
     key = "spark.sql.autoBroadcastJoinThreshold"
     default_threshold = spark.conf.get(key)
@@ -169,62 +164,27 @@ def main():
                   "" if path[-1].startswith("BroadcastHashJoin")
                   else f"{path[1:]}")
 
-    # 7. df-capped ngram join: the hot-shingle exclusion is a
-    # broadcast anti-join (no shuffle of the shingle stream for it)
-    from pyrosm_spark.operators.dedup import ngram_jaccard_pairs
-    docs = spark.read.parquet(f"{sf}/documents.parquet")
-    p = plan_of(ngram_jaccard_pairs(docs, threshold=0.2))
-    check("ngram df cap: hot-shingle anti-join is broadcast",
-          "BroadcastHashJoin" in p and "LeftAnti" in p)
-
-    # 8. banded self-joins (dedup candidate generators): the two sides
-    # are the same corpus-sized table — must be ShuffledHashJoin, never
-    # a broadcast build (driver OOM at scale, single-threaded build)
-    from pyrosm_spark.operators.dedup import phash_pairs
-    img_df = spark.read.parquet(os.path.join(em.SYNTH_DIR,
-                                             "images.parquet"))
-    p = plan_of(phash_pairs(img_df, n_blocks=8, strategy="join"))
-    check("phash_pairs(join): self-join is ShuffledHashJoin",
-          "ShuffledHashJoin" in p)
-    p = plan_of(phash_pairs(img_df, n_blocks=8, strategy="grouped"))
-    check("phash_pairs(grouped): bucket eval via grouped Arrow, "
-          "no join of candidates",
-          "FlatMapGroupsInPandas" in p and "NestedLoop" not in p)
-
-    # 9. pinned-layout exchange elision (r5): eagerly materialized
-    # pins partitioned on the downstream keys must be RECOGNIZED —
-    # EnsureRequirements re-adding an exchange on those keys means the
-    # layout regressed to decoration. Count ENSURE_REQUIREMENTS
-    # exchanges (REPARTITION_BY_* lines are the deliberate layout
-    # writes, not violations).
-    def ensure_exchanges(plan: str, key_substr: str | None = None):
-        return [ln for ln in plan.splitlines()
-                if "Exchange" in ln and "ENSURE_REQUIREMENTS" in ln
-                and (key_substr is None or key_substr in ln)]
-
-    from pyrosm_spark.operators.dedup import (minhash_lsh_pairs,
-                                              simhash_pairs)
+    # 7. embedding LSH: the pinned (vid, bucket) frame is partitioned on
+    # the bucket key, so the bucket self-join must be RECOGNIZED as
+    # co-partitioned — EnsureRequirements re-adding an exchange on it
+    # means the layout regressed to decoration (REPARTITION_BY_* lines
+    # are the deliberate layout write, not violations). Broadcast is
+    # off, as for a real corpus: at this size AQE would otherwise
+    # broadcast one side and hide a missing layout.
     from pyrosm_spark.operators.similarity import lsh_cosine_pairs
+    emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
+    spark.conf.set(key, "-1")
+    try:
+        p = plan_of(lsh_cosine_pairs(emb, threshold=0.35))
+    finally:
+        spark.conf.set(key, default_threshold)
+    ensure = [ln for ln in p.splitlines() if "Exchange" in ln
+              and "ENSURE_REQUIREMENTS" in ln and "bucket" in ln]
+    check("embedding LSH: bucket self-join exchange-free",
+          len(ensure) == 0, f"(found {len(ensure)})")
 
-    p = plan_of(simhash_pairs(docs, max_hamming=8))
-    check("simhash (unblocked banded join): zero ENSURE exchanges",
-          len(ensure_exchanges(p)) == 0,
-          f"(found {len(ensure_exchanges(p))})")
-    p = plan_of(minhash_lsh_pairs(docs, n_blocks=4))
-    check("minhash (const-blocked banded join): probe side rides the "
-          "pinned layout (exactly one ENSURE exchange, the replicated "
-          "build side)",
-          len(ensure_exchanges(p)) == 1,
-          f"(found {len(ensure_exchanges(p))})")
-    p = plan_of(ngram_jaccard_pairs(docs, threshold=0.2))
-    check("ngram inverted index: no ENSURE exchange on the shingle key",
-          len(ensure_exchanges(p, "shingle")) == 0)
-    emb = spark.read.parquet(f"{sf}/embeddings.parquet")
-    p = plan_of(lsh_cosine_pairs(emb, threshold=0.35))
-    check("embedding LSH: bucket self-join exchange-free and "
-          "vector-free (vectors gathered by id afterwards)",
-          len(ensure_exchanges(p, "bucket")) == 0)
-
+    world.close()
+    shutil.rmtree(world.scratch, ignore_errors=True)
     print(f"\n{'ALL OK' if not FAILS else f'{len(FAILS)} FAILURES: {FAILS}'}")
     sys.exit(1 if FAILS else 0)
 

@@ -1,32 +1,34 @@
-"""Driver contract for the pyrosm_spark engine.
+"""The paper's queries, each with an independent DuckDB value oracle.
 
-``entry(spark)`` — flagship training-data pipeline over the sf0.001
-tables. ``queries()`` — one entry per implemented operator (SURVEY.md
-§2 + the pipeline ops), each a (spark, sf_dir) -> DataFrame callable.
-``oracle_sql()`` — a DuckDB-runnable value oracle for EVERY query
-(50/50): ANSI-SQL mirrors for the SQL-expressible ops (incl. the
-chain-collapse walks, multipolygon PIP and both ANN indexes), and
-generator-differential oracles for the binary-payload ops (decode /
-audio / video-frame outputs check against phash/shape/duration
-references the independent pyarrow generator stored at
-table-build time).
+``QUERIES`` maps a name to a ``(world) -> DataFrame`` callable over the
+committed synthetic world in ``data/synth`` (generated by
+``pyrosm_spark.synth``, seed 42). ``oracle_sql()`` maps the same names
+to DuckDB SQL that computes the expected rows from the same parquet
+files without the engine: ANSI-SQL mirrors for the SQL-expressible
+operators (layers, networks, crop, PBF roundtrips, tiling, the PIP,
+raster and kNN joins, chain collapse), a generator-differential oracle
+for the image decode (phash/shape references stored at table-build
+time) and a committed golden for the Helsinki buildings. The oracles
+read the materialized plain tag columns, an evaluation path
+independent of the engine's MapType tags. ``assert_matches`` is the
+one compare.
 
-OSM-domain queries run over the deterministic synthetic world committed
-at ``data/synth`` (generated by pyrosm_spark.synth, seed=42); their
-oracles read the same parquet via read_parquet() using the materialized
-plain tag columns — an independent evaluation path from the engine's
-MapType tags.
+``tests/test_value_oracles.py`` runs every pair; ``scripts/plan_audit.py``
+audits the plans of some of these queries.
 """
 
 from __future__ import annotations
 
+import functools
+import math
 import os
-from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-REPO_DIR = os.path.dirname(os.path.abspath(__file__))
+from tests.test_reference_parity import REF_HELSINKI_PBF
+
+REPO_DIR = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SYNTH_DIR = os.path.join(REPO_DIR, "data", "synth")
 
 W = f"read_parquet('{SYNTH_DIR}/osm_ways.parquet')"
@@ -35,126 +37,87 @@ R = f"read_parquet('{SYNTH_DIR}/osm_relations.parquet')"
 IMG = f"read_parquet('{SYNTH_DIR}/images.parquet')"
 
 
-def _ensure_synth():
-    from pyrosm_spark.synth import (
-        ensure_images_table,
-        ensure_osm_tables,
-        ensure_videos_table,
-    )
+class World:
+    """The synthetic world the queries read, plus the frames several
+    of them share. The driving network and the building polygons are
+    built and persisted on first use; :meth:`close` unpersists them.
+    ``scratch`` is a writable directory for the queries that write
+    (checkpoint, Z-order layout)."""
 
-    ensure_osm_tables(SYNTH_DIR, grid=16, seed=42)
-    ensure_images_table(os.path.join(SYNTH_DIR, "images.parquet"),
-                        n_rows=2000, seed=42)
-    ensure_videos_table(os.path.join(SYNTH_DIR, "videos.parquet"),
-                        n_rows=50, seed=42)
-    # the audio oracle reads this path too — the harness may evaluate
-    # oracle_sql() before running the engine query, so every table an
-    # oracle references must exist after _ensure_synth()
-    from pyrosm_spark.synth import ensure_audio_table
+    def __init__(self, spark: SparkSession, scratch: str):
+        from pyrosm_spark.synth import ensure_images_table, ensure_osm_tables
 
-    ensure_audio_table(os.path.join(SYNTH_DIR, "audio.parquet"),
-                       n_rows=500, seed=42)
+        ensure_osm_tables(SYNTH_DIR, grid=16, seed=42)
+        ensure_images_table(os.path.join(SYNTH_DIR, "images.parquet"),
+                            n_rows=2000, seed=42)
+        self.spark = spark
+        self.scratch = scratch
+        self._held: list = []
 
+    def osm(self):
+        from pyrosm_spark.operators.osm_source import load_osm
 
-def _osm(spark: SparkSession):
-    from pyrosm_spark.operators.osm_source import load_osm
+        return load_osm(self.spark, SYNTH_DIR)
 
-    _ensure_synth()
-    return load_osm(spark, SYNTH_DIR)
+    def images(self) -> DataFrame:
+        return self.spark.read.parquet(
+            os.path.join(SYNTH_DIR, "images.parquet"))
 
+    def world_pbf(self) -> str:
+        """The synth world as a byte-level .osm.pbf (the from-scratch
+        codec in sources/pbf.py), written once if absent; queries over
+        it prove the full S4-S7 ingest + S11 export stack against the
+        parquet oracle."""
+        path = os.path.join(SYNTH_DIR, "world.osm.pbf")
+        if not os.path.exists(path):
+            from pyrosm_spark.operators.osm_source import load_osm
+            from pyrosm_spark.sources.pbf import write_pbf
 
-def _images(spark: SparkSession) -> DataFrame:
-    _ensure_synth()
-    return spark.read.parquet(os.path.join(SYNTH_DIR, "images.parquet"))
+            n, w, r = load_osm(self.spark, SYNTH_DIR, visible_only=False)
+            write_pbf(n, w, r, path)
+        return path
 
+    @functools.cached_property
+    def driving_network(self):
+        """``(graph_nodes, edges)`` of the driving network, which seven
+        queries share (the J1 node->way join plus length/geometry)."""
+        from pyrosm_spark.operators.network import get_network
 
-_NET_CACHE: dict = {}
+        nodes, ways, _ = self.osm()
+        gnodes, edges = get_network(nodes, ways, "driving", with_nodes=True)
+        return self._hold(gnodes), self._hold(edges)
 
+    @functools.cached_property
+    def building_polygons(self) -> DataFrame:
+        """The building layer's multipolygon assembly, which the PIP
+        and raster queries share."""
+        from pyrosm_spark.operators.layers import get_buildings
 
-def _evict_dead_sessions(app_id: str) -> None:
-    """Drop cache entries from previous SparkSessions (keys are the
-    application id, bare or as a tuple's last element): a long-lived
-    harness process must not retain dead sessions' persisted frames."""
-    for k in list(_NET_CACHE):
-        kid = k[-1] if isinstance(k, tuple) else k
-        if kid != app_id:
-            _NET_CACHE.pop(k, None)
+        nodes, ways, rels = self.osm()
+        return self._hold(get_buildings(nodes, ways, rels).select(
+            "id", "osm_type", "geometry"))
 
+    def _hold(self, df: DataFrame) -> DataFrame:
+        df = df.persist()
+        self._held.append(df)
+        return df
 
-def _driving_network(spark: SparkSession):
-    """Memoized driving network ``(graph_nodes, edges)``, persisted
-    once per SparkSession: seven gate queries share this exact build
-    (J1 node→way join + length/geometry), which is the most expensive
-    shared prefix in the suite. Keyed on the application id so a fresh
-    harness session rebuilds cleanly; the persisted frames are
-    sf0.01-sized (hundreds of rows) so executor memory is a non-issue."""
-    from pyrosm_spark.operators.network import get_network
-
-    key = spark.sparkContext.applicationId
-    hit = _NET_CACHE.get(key)
-    if hit is None:
-        _evict_dead_sessions(key)
-        nodes, ways, _ = _osm(spark)
-        gnodes, edges = get_network(nodes, ways, "driving",
-                                    with_nodes=True)
-        hit = (gnodes.persist(), edges.persist())
-        _NET_CACHE[key] = hit
-    return hit
-
-
-# ==========================================================================
-# entry — flagship
-# ==========================================================================
-
-def entry(spark: SparkSession) -> DataFrame:
-    """Flagship: the COMPLETE per-document training-data pipeline at
-    sf0.001 in one DataFrame plan — text analysis, exact dedup,
-    MinHash-LSH candidate counts, AND the keep-one-per-cluster
-    near-dup verdict (canonical id + is_near_duplicate) a training
-    run actually filters on."""
-    from pyrosm_spark.operators.dedup import (
-        exact_dedup,
-        minhash_lsh_pairs,
-        near_dup_clusters,
-    )
-    from pyrosm_spark.operators.text import analyze_documents
-
-    _apply_session_tuning(spark)  # same defensive tuning as _tuned
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    analyzed = analyze_documents(docs)
-    dups = exact_dedup(docs).select("doc_id", "is_duplicate")
-    # materialize once: the banded self-join below feeds BOTH the
-    # candidate counts and the near-dup clustering — without this the
-    # costliest stage of the pipeline runs twice
-    pairs = minhash_lsh_pairs(docs).localCheckpoint()
-    cand = (
-        pairs.select(F.col("doc_a").alias("doc_id"))
-        .unionAll(pairs.select(F.col("doc_b").alias("doc_id")))
-        .groupBy("doc_id").agg(F.count("*").alias("n_lsh_candidates"))
-    )
-    clusters = near_dup_clusters(pairs, docs=docs).select(
-        "doc_id", "canonical_id",
-        F.col("is_duplicate").alias("is_near_duplicate"))
-    return (
-        analyzed.join(dups, "doc_id", "left")
-        .join(cand, "doc_id", "left")
-        .join(clusters, "doc_id", "left")
-        .withColumn("n_lsh_candidates",
-                    F.coalesce("n_lsh_candidates", F.lit(0)))
-        .orderBy("doc_id")
-    )
+    def close(self) -> None:
+        for df in self._held:
+            df.unpersist()
+        self._held.clear()
 
 
 # ==========================================================================
-# Spark-side queries
+# Engine queries
 # ==========================================================================
 
 def _q_network_edges(network_type: str):
-    def q(spark: SparkSession, sf_dir: str) -> DataFrame:
+    def q(world: World) -> DataFrame:
         from pyrosm_spark.operators import geometry as geom
         from pyrosm_spark.operators.network import filter_network_ways
 
-        nodes, ways, _ = _osm(spark)
+        nodes, ways, _ = world.osm()
         w = filter_network_ways(ways, network_type)
         w = geom.way_coordinates(w, nodes).filter(geom.pts_size() >= 2)
         return w.select(
@@ -167,20 +130,20 @@ def _q_network_edges(network_type: str):
     return q
 
 
-def _q_network_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _, edges = _driving_network(spark)
+def _q_network_segments(world: World) -> DataFrame:
+    _, edges = world.driving_network
     return edges.select("id", "u", "v", "length")
 
 
-def _q_directed_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _q_directed_edges(world: World) -> DataFrame:
     from pyrosm_spark.operators.network import directed_edges
 
-    _, edges = _driving_network(spark)
+    _, edges = world.driving_network
     return directed_edges(edges, "driving").select("id", "u", "v")
 
 
 def _standalone_building_ways(nodes, ways, rels) -> DataFrame:
-    """Shared by _q_buildings_ways and _q_tile_adaptive: building-
+    """Shared by _q_buildings_ways and _q_pip_bbox: building-
     tagged ways minus relation members (J4), coordinate-joined (J1),
     >=2 resolvable points — ONE definition so a semantics fix (e.g.
     the member-exclusion rule) can't leave a stale copy behind."""
@@ -195,10 +158,10 @@ def _standalone_building_ways(nodes, ways, rels) -> DataFrame:
     return geom.way_coordinates(w, nodes).filter(geom.pts_size() >= 2)
 
 
-def _q_buildings_ways(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _q_buildings_ways(world: World) -> DataFrame:
     from pyrosm_spark.operators import geometry as geom
 
-    nodes, ways, rels = _osm(spark)
+    nodes, ways, rels = world.osm()
     w = _standalone_building_ways(nodes, ways, rels)
     return w.select(
         "id",
@@ -209,10 +172,10 @@ def _q_buildings_ways(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _q_pois_nodes(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _q_pois_nodes(world: World) -> DataFrame:
     from pyrosm_spark.functions.filters import element_filter_column
 
-    nodes, _, _ = _osm(spark)
+    nodes, _, _ = world.osm()
     pred = element_filter_column(
         F.col("tags"), {"amenity": True, "shop": ["supermarket"]})
     return nodes.filter(pred).select(
@@ -220,57 +183,57 @@ def _q_pois_nodes(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("tags")["shop"].alias("shop"), "lon", "lat")
 
 
-def _q_boundaries(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _q_boundaries(world: World) -> DataFrame:
     from pyrosm_spark.operators.layers import get_boundaries
 
-    nodes, ways, rels = _osm(spark)
+    nodes, ways, rels = world.osm()
     b = get_boundaries(nodes, ways, rels, boundary_type="administrative")
     return b.select("id", "osm_type", F.col("tags")["name"].alias("name"))
 
 
-def _q_bbox_ways(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _q_bbox_ways(world: World) -> DataFrame:
     from pyrosm_spark.operators.network import filter_network_ways, ways_in_bbox
     from pyrosm_spark.synth.osm import TEST_BBOX
 
-    nodes, ways, _ = _osm(spark)
+    nodes, ways, _ = world.osm()
     w = filter_network_ways(ways, "all")
     return ways_in_bbox(w, nodes, TEST_BBOX).select("id")
 
 
-def _q_latest_node_version(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _q_latest_node_version(world: World) -> DataFrame:
     from pyrosm_spark.operators.osm_source import latest_version
 
-    nodes, _, _ = _osm(spark)
+    nodes, _, _ = world.osm()
     lv = latest_version(nodes.select("id", "version", "timestamp", "lon", "lat"),
                         order_cols=("version", "timestamp"))
     return lv.select("id", "version", "lon", "lat")
 
 
-def _q_custom_bracket_network(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _q_custom_bracket_network(world: World) -> DataFrame:
     """F4/F5 — Overpass-bracket custom filter compiled to Catalyst."""
     from pyrosm_spark.operators.network import filter_network_ways
 
-    _, ways, _ = _osm(spark)
+    _, ways, _ = world.osm()
     w = filter_network_ways(
         ways, custom_filter='["highway"~"path|cycleway"]["bicycle"!="no"]')
     return w.select("id", F.col("tags")["highway"].alias("highway"))
 
 
-def _q_straddling_relations(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _q_straddling_relations(world: World) -> DataFrame:
     """A9 — relations with some-but-not-all member ways present."""
     from pyrosm_spark.operators.relations import straddling_relation_count
 
-    _, ways, rels = _osm(spark)
+    _, ways, rels = world.osm()
     return straddling_relation_count(rels, ways)
 
 
-def _q_crop(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _q_crop(world: World) -> DataFrame:
     """S10 selection semantics — 3-stage bbox crop cascade: in-box
     nodes -> complete ways -> node closure -> referencing relations."""
     from pyrosm_spark.operators.crop import crop_tables
     from pyrosm_spark.synth.osm import TEST_BBOX
 
-    nodes, ways, rels = _osm(spark)
+    nodes, ways, rels = world.osm()
     n, w, r = crop_tables(nodes, ways, rels, TEST_BBOX)
     return (
         n.select(F.lit("node").alias("kind"), "id")
@@ -279,12 +242,8 @@ def _q_crop(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-REF_HELSINKI_PBF = "/root/reference/pyrosm/data/Helsinki.osm.pbf"
-
-
-def _q_buildings_relations_helsinki(spark: SparkSession,
-                                    sf_dir: str) -> DataFrame:
-    """G6 driver gate — the reference's own public Helsinki fixture run
+def _q_buildings_relations_helsinki(world: World) -> DataFrame:
+    """G6 — the reference's own public Helsinki fixture run
     end-to-end: PBF blob decode -> building filter -> relation member
     resolve -> multipolygon even-odd assembly (the single most
     parity-sensitive path). The reference's golden is 486 building
@@ -300,7 +259,7 @@ def _q_buildings_relations_helsinki(spark: SparkSession,
     per-feature WKB digest, not just the row count."""
     from pyrosm_spark.api import OSM
 
-    gdf = OSM(spark, REF_HELSINKI_PBF).get_buildings()
+    gdf = OSM(world.spark, REF_HELSINKI_PBF).get_buildings()
     return gdf.select(
         "id", "osm_type", "building",
         # WKB header byte 2 (LE uint32 low byte) = geometry type
@@ -311,29 +270,14 @@ def _q_buildings_relations_helsinki(spark: SparkSession,
     )
 
 
-def _world_pbf(spark: SparkSession) -> str:
-    """Write the synth world as a byte-level .osm.pbf once (the
-    from-scratch codec in sources/pbf.py); queries over it prove the
-    full S4-S7 ingest + S11 export stack against the parquet oracle."""
-    _ensure_synth()
-    path = os.path.join(SYNTH_DIR, "world.osm.pbf")
-    if not os.path.exists(path):
-        from pyrosm_spark.operators.osm_source import load_osm
-        from pyrosm_spark.sources.pbf import write_pbf
-
-        n, w, r = load_osm(spark, SYNTH_DIR, visible_only=False)
-        write_pbf(n, w, r, path)
-    return path
-
-
-def _q_pbf_roundtrip_nodes(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _q_pbf_roundtrip_nodes(world: World) -> DataFrame:
     """S4-S7/S11 — every node survives parquet -> .osm.pbf (write_pbf)
     -> read_pbf byte-exactly: ids, 100-nanodegree coordinate units
     (the PBF wire precision, compared as integers), tag cardinality
     and metadata against the original parquet table."""
     from pyrosm_spark.sources.pbf import read_pbf
 
-    nodes, _w, _r = read_pbf(spark, _world_pbf(spark))
+    nodes, _w, _r = read_pbf(world.spark, world.world_pbf())
     return nodes.select(
         "id",
         F.round(F.col("lon") * 1e7).cast("long").alias("lon_e7"),
@@ -343,16 +287,15 @@ def _q_pbf_roundtrip_nodes(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _q_pbf_roundtrip_ways(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _q_pbf_roundtrip_ways(world: World) -> DataFrame:
     """S4/S11 — every way survives the .osm.pbf roundtrip with its
     full delta-coded ref list byte-exactly."""
     from pyrosm_spark.sources.pbf import read_pbf
 
-    _n, ways, _r = read_pbf(spark, _world_pbf(spark))
-    # the ref list is compared as one scalar signature: the driver's
-    # canonicalizer sorts columns with pandas, which can't order raw
-    # array cells (unhashable) — a joined string carries the same
-    # byte-exactness evidence and is sortable on both engines
+    _n, ways, _r = read_pbf(world.spark, world.world_pbf())
+    # the ref list is compared as one scalar signature: array cells
+    # are unhashable and do not sort, while a joined string carries
+    # the same byte-exactness evidence and sorts on both engines
     return ways.select(
         "id",
         F.coalesce(
@@ -363,13 +306,13 @@ def _q_pbf_roundtrip_ways(spark: SparkSession, sf_dir: str) -> DataFrame:
         "version", "timestamp", "visible")
 
 
-def _q_pbf_roundtrip_relations(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _q_pbf_roundtrip_relations(world: World) -> DataFrame:
     """S4/S11 — relations survive the roundtrip: member ids (delta),
     types (enum), roles (string table) canonicalized to id:type:role
     strings for the cross-engine compare."""
     from pyrosm_spark.sources.pbf import read_pbf
 
-    _n, _w, rels = read_pbf(spark, _world_pbf(spark))
+    _n, _w, rels = read_pbf(world.spark, world.world_pbf())
     # members collapse to one sortable scalar per row (see refs_sig)
     return rels.select(
         "id",
@@ -384,13 +327,13 @@ def _q_pbf_roundtrip_relations(spark: SparkSession, sf_dir: str) -> DataFrame:
         "version", "timestamp", "visible")
 
 
-def _q_pbf_scan_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _q_pbf_scan_summary(world: World) -> DataFrame:
     """S4-S7 — whole-file checksum of the .osm.pbf roundtrip: per
     element type, row count, id sum, total tag entries, total way
     refs and relation members vs the source parquet tables."""
     from pyrosm_spark.sources.pbf import read_pbf_union
 
-    u = read_pbf_union(spark, _world_pbf(spark))
+    u = read_pbf_union(world.spark, world.world_pbf())
 
     def _cnt(col):
         return F.sum(F.when(F.col(col).isNull(), F.lit(0))
@@ -405,13 +348,11 @@ def _q_pbf_scan_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _q_latest_history(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _q_latest_history(world: World) -> DataFrame:
     """A1 — per-column last-non-null over version history (the
     get_latest_version semantics; data_filter.pyx:340-343)."""
     from pyrosm_spark.operators.osm_source import latest_version
-
-    _ensure_synth()
-    h = spark.read.parquet(os.path.join(SYNTH_DIR,
+    h = world.spark.read.parquet(os.path.join(SYNTH_DIR,
                                         "osm_nodes_history.parquet"))
     src = h.filter(F.col("visible")).select(
         "id", "version", "timestamp",
@@ -423,38 +364,37 @@ def _q_latest_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     return lv.select("id", "lon", "lat", "name", "amenity")
 
 
-def _q_tag_presentation_ways(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _q_tag_presentation_ways(world: World) -> DataFrame:
     """§1.3 — dynamic presentation schema: occurring-only columns,
     column-level numeric coercion, canonical leftover tags."""
     from pyrosm_spark.functions.tags import present_layer
 
-    _, ways, _ = _osm(spark)
+    _, ways, _ = world.osm()
     src = ways.filter(F.col("tags")["maxspeed"].isNotNull())
     out = present_layer(src, ["maxspeed", "lanes", "name", "height"],
                         leftover_json=False)
     return out.select("id", "maxspeed", "lanes", "name", "tags_leftover")
 
 
-def _q_id_tag_rename(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _q_id_tag_rename(world: World) -> DataFrame:
     """tagparser.pyx:41-44 — a tag literally keyed 'id' -> id_tag."""
     from pyrosm_spark.functions.tags import present_layer
 
-    nodes, _, _ = _osm(spark)
+    nodes, _, _ = world.osm()
     src = nodes.filter(F.col("tags")["id"].isNotNull())
     out = present_layer(src, ["amenity", "id"], coerce=False,
                         leftover_json=False)
     return out.select("id", "id_tag", "amenity")
 
 
-def _q_tile_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _q_tile_assignment(world: World) -> DataFrame:
     from pyrosm_spark.operators.spatial_join import assign_tiles
 
-    return assign_tiles(_images(spark), 15).select("image_id", "cell")
+    return assign_tiles(world.images(), 15).select("image_id", "cell")
 
 
-def _q_tile_adaptive(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Adaptive cell splitting (the north rule's skew handling as a
-    gate query): hot cells — count > 4x the mean of the res-12
+def _q_tile_adaptive(world: World) -> DataFrame:
+    """Adaptive cell splitting (the north rule's skew handling): hot cells — count > 4x the mean of the res-12
     histogram — re-key their rows at res 15 (64x smaller tiles), cold
     rows keep res 12. The oracle mirrors histogram, threshold, and
     split in pure SQL over the same closed-form cell encoding."""
@@ -463,39 +403,33 @@ def _q_tile_adaptive(spark: SparkSession, sf_dir: str) -> DataFrame:
         hot_cells,
     )
 
-    imgs = _images(spark)
+    imgs = world.images()
     hot = hot_cells(imgs, 12, threshold_ratio=4.0)
     return assign_tiles_adaptive(imgs, 12, hot, split_levels=3).select(
         "image_id", "cell")
 
 
-def _q_checkpointed_tile_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S9 under the oracle gate: the per-cell histogram builds THROUGH
-    the CheckpointManager (deterministic stage key over the input
-    fingerprint; atomic tmp+rename publish; resumed from the
-    checkpoint on any re-run — the driver's second invocation takes
-    the resume path) and must equal the direct SQL aggregation either
-    way."""
-    import tempfile
-
+def _q_checkpointed_tile_counts(world: World) -> DataFrame:
+    """S9: the per-cell histogram builds THROUGH the CheckpointManager
+    (deterministic stage key over the input fingerprint; atomic
+    tmp+rename publish; resumed from the checkpoint on any re-run) and
+    must equal the direct SQL aggregation either way."""
     from pyrosm_spark.operators.spatial_join import cell_histogram
     from pyrosm_spark.plans.checkpoint import CheckpointManager
 
-    _ensure_synth()
     img_path = os.path.join(SYNTH_DIR, "images.parquet")
-    root = os.path.join(tempfile.gettempdir(), "pyrosm_spark_ckpt")
-    mgr = CheckpointManager(spark, root)
+    mgr = CheckpointManager(world.spark, os.path.join(world.scratch, "ckpt"))
     out = mgr.stage(
         "tile_counts_r12", {"res": 12}, [img_path],
-        lambda: cell_histogram(spark.read.parquet(img_path), 12),
+        lambda: cell_histogram(world.spark.read.parquet(img_path), 12),
     )
     return out.select("cell", F.col("count").alias("n"))
 
 
-def _q_tile_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _q_tile_counts(world: World) -> DataFrame:
     from pyrosm_spark.operators.spatial_join import cell_histogram
 
-    return cell_histogram(_images(spark), 12).select(
+    return cell_histogram(world.images(), 12).select(
         "cell", F.col("count").alias("n"))
 
 
@@ -504,71 +438,28 @@ _ZORDER_BBOX = (24.8, 60.15, 25.0, 60.3)
 _ZORDER_RES = 15
 
 
-def _q_zorder_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Z-order layout roundtrip under the oracle gate: cluster the
+def _q_zorder_scan(world: World) -> DataFrame:
+    """Z-order layout roundtrip: cluster the
     image table on the Morton key (repartitionByRange +
     sortWithinPartitions), re-read with the bbox lowered to pushed
     Morton-range predicates, and project the persisted key. The oracle
     recomputes the key closed-form in SQL, so a hash-green row proves
     both the pruned scan's result set and the key's bit-exactness."""
-    import tempfile
-
     from pyrosm_spark.sources.layout import (
         scan_spatial,
         write_spatial_clustered,
     )
 
-    imgs = _images(spark).select("image_id", "lon", "lat")
-    path = os.path.join(
-        tempfile.gettempdir(),
-        f"pyrosm_spark_zorder_{spark.sparkContext.applicationId}")
+    imgs = world.images().select("image_id", "lon", "lat")
+    path = os.path.join(world.scratch, "zorder")
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         write_spatial_clustered(imgs, path, res=_ZORDER_RES)
-    out = scan_spatial(spark, path, bbox=_ZORDER_BBOX, res=_ZORDER_RES)
+    out = scan_spatial(world.spark, path, bbox=_ZORDER_BBOX, res=_ZORDER_RES)
     return out.select(
         "image_id", F.col("_zkey").alias("zkey"), "lon", "lat")
 
 
-def _q_training_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fixed-size spatially-clustered training shards (the export
-    layout a 10^12-image dataloader consumes): shard i holds rows
-    [i*256, (i+1)*256) of the total (zkey, image_id) order. The
-    bucketed two-pass assignment (no single-task global sort) must
-    equal the oracle's one-window row_number formulation, summarized
-    per shard."""
-    from pyrosm_spark.sources.layout import assign_shards, morton_key
-
-    imgs = _images(spark).select("image_id", "lon", "lat")
-    keyed = imgs.withColumn("_zkey", morton_key(
-        F.col("lon"), F.col("lat"), _ZORDER_RES))
-    sharded = assign_shards(keyed, 256, "_zkey", "image_id",
-                            n_buckets=64)
-    return sharded.groupBy("shard").agg(
-        F.count("*").alias("n"),
-        F.min("image_id").alias("first_id"),
-        F.max("image_id").alias("last_id"),
-        F.min("_zkey").alias("min_zkey"),
-        F.max("_zkey").alias("max_zkey"))
-
-
-def _building_polygons(spark: SparkSession) -> DataFrame:
-    """Memoized building polygon layer (same pattern as
-    ``_driving_network``): the multipolygon assembly feeds three PIP
-    gate queries — build and persist it once per session."""
-    from pyrosm_spark.operators.layers import get_buildings
-
-    key = ("bpolys", spark.sparkContext.applicationId)
-    hit = _NET_CACHE.get(key)
-    if hit is None:
-        _evict_dead_sessions(key[-1])
-        nodes, ways, rels = _osm(spark)
-        hit = get_buildings(nodes, ways, rels).select(
-            "id", "osm_type", "geometry").persist()
-        _NET_CACHE[key] = hit
-    return hit
-
-
-def _q_pip_bbox(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _q_pip_bbox(world: World) -> DataFrame:
     """Images joined to standalone building ways by bbox containment —
     the oracle-checkable companion of the exact PIP join (the bbox is
     the cover-prune stage of the same plan)."""
@@ -578,12 +469,12 @@ def _q_pip_bbox(spark: SparkSession, sf_dir: str) -> DataFrame:
         cover_cells_expr,
     )
 
-    nodes, ways, rels = _osm(spark)
+    nodes, ways, rels = world.osm()
     w = _standalone_building_ways(nodes, ways, rels)
     polys = w.select(F.col("id").alias("poly_id"),
                      geom.bbox_struct().alias("bbox"))
     cover = polys.withColumn("cell", F.explode(cover_cells_expr("bbox", 15)))
-    pts = assign_tiles(_images(spark), 15)
+    pts = assign_tiles(world.images(), 15)
     return (
         pts.join(cover, "cell")
         .filter(F.col("lon").between(F.col("bbox.xmin"), F.col("bbox.xmax"))
@@ -592,7 +483,7 @@ def _q_pip_bbox(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _q_pip_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _q_pip_exact(world: World) -> DataFrame:
     """J10 — exact PIP over ALL building polygons (standalone ways +
     multipolygon relations). ``osm_type`` disambiguates way-vs-relation
     poly ids (the synth id spaces overlap numerically). Oracle: summed
@@ -601,25 +492,25 @@ def _q_pip_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-polygon containment-depth union."""
     from pyrosm_spark.operators.spatial_join import point_in_polygon_join
 
-    j = point_in_polygon_join(_images(spark), _building_polygons(spark),
+    j = point_in_polygon_join(world.images(), world.building_polygons,
                               res=15)
     return j.select("image_id", "poly_id",
                     F.col("poly_osm_type").alias("osm_type"))
 
 
-def _q_pip_exact_ways(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _q_pip_exact_ways(world: World) -> DataFrame:
     """Exact PIP restricted to standalone closed building WAYS — the
     single-ring case whose even-odd ray cast IS expressible in the SQL
     oracle (crossing parity over cyclic segments); pip_exact_join
     extends the same oracle to multipolygon relations."""
     from pyrosm_spark.operators.spatial_join import point_in_polygon_join
 
-    polys = _building_polygons(spark).filter("osm_type = 'way'")
-    j = point_in_polygon_join(_images(spark), polys, res=15)
+    polys = world.building_polygons.filter("osm_type = 'way'")
+    j = point_in_polygon_join(world.images(), polys, res=15)
     return j.select("image_id", "poly_id")
 
 
-def _q_pip_left(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _q_pip_left(world: World) -> DataFrame:
     """how='left' PIP join over standalone building ways: matched
     rows are the inner pair set, and every image that hit NO polygon
     survives with a null poly_id — the 'every image row keeps its
@@ -627,13 +518,13 @@ def _q_pip_left(spark: SparkSession, sf_dir: str) -> DataFrame:
     JOIN of the images table against the ray-cast hit set."""
     from pyrosm_spark.operators.spatial_join import point_in_polygon_join
 
-    polys = _building_polygons(spark).filter("osm_type = 'way'")
-    j = point_in_polygon_join(_images(spark), polys, res=15,
+    polys = world.building_polygons.filter("osm_type = 'way'")
+    j = point_in_polygon_join(world.images(), polys, res=15,
                               how="left", point_id_col="image_id")
     return j.select("image_id", "poly_id")
 
 
-def _q_pip_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _q_pip_compact(world: World) -> DataFrame:
     """The COMPACTED mixed-resolution PIP join (H3-style
     compact/uncompact covers, the north rule's large-polygon scale
     path) — must produce the identical pair set as the uniform-res
@@ -643,12 +534,12 @@ def _q_pip_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     j = point_in_polygon_join_compact(
-        _images(spark), _building_polygons(spark), res=15)
+        world.images(), world.building_polygons, res=15)
     return j.select("image_id", "poly_id",
                     F.col("poly_osm_type").alias("osm_type"))
 
 
-def _q_pip_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _q_pip_auto(world: World) -> DataFrame:
     """Mixed-corpus routed PIP join: buildings (uniform equi-join
     route) + a world-spanning literal rectangle (capped compact route)
     in ONE call — point_in_polygon_join_auto splits the corpus by
@@ -660,21 +551,21 @@ def _q_pip_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     import numpy as np
 
-    world = G.wkb_polygon([np.array(
+    rect = G.wkb_polygon([np.array(
         [[-179.0, -89.0], [179.0, -89.0], [179.0, 89.0],
          [-179.0, 89.0], [-179.0, -89.0]])])
-    corpus = _building_polygons(spark).unionByName(
-        spark.createDataFrame(
-            [(-1, "synthetic", bytearray(world))],
+    corpus = world.building_polygons.unionByName(
+        world.spark.createDataFrame(
+            [(-1, "synthetic", bytearray(rect))],
             "id long, osm_type string, geometry binary"))
     j = point_in_polygon_join_auto(
-        _images(spark), corpus, res=15, id_cols=("id", "osm_type"))
+        world.images(), corpus, res=15, id_cols=("id", "osm_type"))
     return j.select("image_id",
                     F.col("poly_id"),
                     F.col("poly_osm_type").alias("osm_type"))
 
 
-def _q_raster_polygon(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _q_raster_polygon(world: World) -> DataFrame:
     """Raster-tile <-> vector-polygon join (north rule): the image
     corpus aggregated into res-12 raster tiles (count payload), each
     tile joined to every standalone building way whose polygon
@@ -687,22 +578,22 @@ def _q_raster_polygon(spark: SparkSession, sf_dir: str) -> DataFrame:
         raster_polygon_join,
     )
 
-    tiles = (assign_tiles(_images(spark), 12)
+    tiles = (assign_tiles(world.images(), 12)
              .groupBy("cell").agg(F.count("*").alias("n_images")))
-    polys = _building_polygons(spark).filter("osm_type = 'way'")
+    polys = world.building_polygons.filter("osm_type = 'way'")
     j = raster_polygon_join(tiles, polys, res=12)
     return j.select("cell", "poly_id", "n_images")
 
 
-def _q_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _q_knn(world: World) -> DataFrame:
     from pyrosm_spark.functions.filters import element_filter_column
     from pyrosm_spark.operators.spatial_join import knn_join
 
-    nodes, _, _ = _osm(spark)
+    nodes, _, _ = world.osm()
     pois = nodes.filter(
         element_filter_column(F.col("tags"), {"amenity": True})
     ).select("id", "lon", "lat")
-    imgs = _images(spark).filter(F.col("image_id") < "img000000200").select(
+    imgs = world.images().filter(F.col("image_id") < "img000000200").select(
         "image_id", "lon", "lat")
     # res 9 cell (~0.7 deg) + ring 1 covers the whole synthetic region ->
     # the cell-local join is exhaustive here, so brute force is an oracle
@@ -712,7 +603,7 @@ def _q_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
                       F.col("knn_rank").cast("int").alias("knn_rank"))
 
 
-def _q_knn_complete(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _q_knn_complete(world: World) -> DataFrame:
     """Ring-ESCALATING kNN under the value oracle: starts at res 15
     (ring 1 covers ~0.003 deg — most images see zero POIs and must
     escalate), widening res 13 -> 11 -> 9 until each point holds >= k
@@ -722,11 +613,11 @@ def _q_knn_complete(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyrosm_spark.functions.filters import element_filter_column
     from pyrosm_spark.operators.spatial_join import knn_join_complete
 
-    nodes, _, _ = _osm(spark)
+    nodes, _, _ = world.osm()
     pois = nodes.filter(
         element_filter_column(F.col("tags"), {"amenity": True})
     ).select("id", "lon", "lat")
-    imgs = _images(spark).filter(F.col("image_id") < "img000000200").select(
+    imgs = world.images().filter(F.col("image_id") < "img000000200").select(
         "image_id", "lon", "lat")
     out = knn_join_complete(imgs, pois, k=3, res=15, ring=1,
                             max_escalations=3, point_id_col="image_id")
@@ -735,226 +626,28 @@ def _q_knn_complete(spark: SparkSession, sf_dir: str) -> DataFrame:
                       F.col("knn_rank").cast("int").alias("knn_rank"))
 
 
-# ---- driver-table queries --------------------------------------------------
-
-def _read(spark, sf_dir, name):
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-
-
-def _q_tpch_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _read(spark, sf_dir, "lineitem")
-    return (
-        li.filter(F.col("l_shipdate") <= "1998-09-02")
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.round(F.sum("l_quantity"), 3).alias("sum_qty"),
-            F.round(F.sum("l_extendedprice"), 3).alias("sum_base_price"),
-            F.round(F.sum(F.col("l_extendedprice")
-                          * (1 - F.col("l_discount"))), 3).alias("sum_disc_price"),
-            F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))
-                          * (1 + F.col("l_tax"))), 3).alias("sum_charge"),
-            F.round(F.avg("l_quantity"), 6).alias("avg_qty"),
-            F.round(F.avg("l_discount"), 6).alias("avg_disc"),
-            F.count("*").alias("count_order"),
-        )
-    )
-
-
-def _q_revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = _read(spark, sf_dir, "customer")
-    o = _read(spark, sf_dir, "orders")
-    n = _read(spark, sf_dir, "nation")
-    return (
-        o.join(c, o["o_custkey"] == c["c_custkey"])
-        .join(F.broadcast(n), c["c_nationkey"] == n["n_nationkey"])
-        .groupBy("n_name")
-        .agg(F.round(F.sum("o_totalprice"), 3).alias("revenue"),
-             F.count("*").alias("n_orders"))
-    )
-
-
-def _q_rollup_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _read(spark, sf_dir, "orders")
-    return (
-        o.rollup("o_orderpriority", "o_orderstatus")
-        .agg(F.count("*").alias("n"),
-             F.round(F.sum("o_totalprice"), 3).alias("total"))
-    )
-
-
-def _q_topk_parts_per_brand(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    p = _read(spark, sf_dir, "part")
-    w = Window.partitionBy("p_brand").orderBy(
-        F.col("p_retailprice").desc(), F.col("p_partkey").asc())
-    return (
-        p.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= 3)
-        .select("p_brand", "p_partkey", "p_retailprice",
-                F.col("rk").cast("int").alias("rk"))
-    )
-
-
-def _q_events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _read(spark, sf_dir, "events")
-    return (
-        e.groupBy(
-            F.date_format(F.date_trunc("hour", "ts"),
-                          "yyyy-MM-dd HH:mm:ss").alias("hour"),
-            "event_type",
-        )
-        .agg(F.count("*").alias("n"), F.round(F.sum("value"), 6).alias("v"))
-    )
-
-
-def _q_user_running_total(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    e = _read(spark, sf_dir, "events").filter(F.col("user_id") < 20)
-    w = (Window.partitionBy("user_id")
-         .orderBy(F.col("ts").asc(), F.col("event_id").asc())
-         .rowsBetween(Window.unboundedPreceding, 0))
-    return e.select(
-        "event_id", "user_id",
-        F.round(F.sum("value").over(w), 6).alias("running_value"),
-    )
-
-
-def _q_analyze_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyrosm_spark.operators.text import analyze_documents
-
-    return analyze_documents(_read(spark, sf_dir, "documents"))
-
-
-def _q_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyrosm_spark.operators.dedup import exact_dedup
-
-    return exact_dedup(_read(spark, sf_dir, "documents"))
-
-
-def _q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyrosm_spark.operators.dedup import ngram_jaccard_pairs
-
-    return ngram_jaccard_pairs(_read(spark, sf_dir, "documents"),
-                               threshold=0.2)
-
-
-def _q_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyrosm_spark.operators.dedup import minhash_signatures
-
-    return minhash_signatures(_read(spark, sf_dir, "documents"))
-
-
-def _q_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyrosm_spark.operators.dedup import minhash_lsh_pairs
-
-    return minhash_lsh_pairs(_read(spark, sf_dir, "documents"))
-
-
-def _q_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyrosm_spark.operators.dedup import embedding_cosine_pairs
-
-    return embedding_cosine_pairs(_read(spark, sf_dir, "embeddings"),
-                                  threshold=0.9)
-
-
-def _q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyrosm_spark.operators.similarity import cosine_topk
-
-    emb = _read(spark, sf_dir, "embeddings")
-    return cosine_topk(emb.filter(F.col("vec_id") < 20), emb, k=5)
-
-
-def _q_phash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyrosm_spark.operators.dedup import phash_pairs
-
-    return phash_pairs(_images(spark), max_hamming=4)
-
-
-def _q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyrosm_spark.operators.dedup import simhash_pairs
-
-    return simhash_pairs(_read(spark, sf_dir, "documents"), max_hamming=8)
-
-
-def _q_near_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The dedup pipeline's final step: MinHash-LSH pairs -> connected
-    components -> keep-one-per-cluster verdict for every document."""
-    from pyrosm_spark.operators.dedup import (
-        minhash_lsh_pairs,
-        near_dup_clusters,
-    )
-
-    docs = _read(spark, sf_dir, "documents")
-    return near_dup_clusters(minhash_lsh_pairs(docs), docs=docs)
-
-
-def _q_embedding_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Scale-path embedding near-dup: LSH-bucketed candidates + exact
-    cosine refine (the banded replacement for the all-pairs
-    embedding_cosine_pairs baseline)."""
-    from pyrosm_spark.operators.similarity import lsh_cosine_pairs
-
-    # threshold chosen to yield non-empty evidence on the synthetic
-    # embeddings (max pairwise cosine ~0.49); LSH is deterministic, so
-    # partial recall at low thresholds still value-checks exactly
-    return lsh_cosine_pairs(_read(spark, sf_dir, "embeddings"),
-                            threshold=0.35)
-
-
-def _q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyrosm_spark.operators.similarity import ann_topk_lsh
-
-    emb = _read(spark, sf_dir, "embeddings")
-    return ann_topk_lsh(emb.filter(F.col("vec_id") < 20), emb, k=5)
-
-
-def _q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyrosm_spark.operators.similarity import ann_topk_ivf
-
-    emb = _read(spark, sf_dir, "embeddings")
-    return ann_topk_ivf(emb.filter(F.col("vec_id") < 20), emb, k=5,
-                        n_cells=8, nprobe=4)
-
-
-def _q_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-PQ ANN — the 10^12-scale index shape: IVF cells bound the
-    corpus fraction scanned, PQ codes bound the bytes (candidates carry
-    m small codes, never raw vectors; scoring is a native ADC lookup).
-    Deterministic end-to-end, so the oracle reproduces the exact
-    approximate ranking (codebooks re-derived from the same
-    hash-prefix sample and embedded as SQL literals)."""
-    from pyrosm_spark.operators.similarity import ann_topk_ivfpq
-
-    emb = _read(spark, sf_dir, "embeddings")
-    return ann_topk_ivfpq(emb.filter(F.col("vec_id") < 20), emb, k=5,
-                          n_cells=8, nprobe=4, m=4, kc=16)
-
-
-def _q_street_count(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _q_street_count(world: World) -> DataFrame:
     from pyrosm_spark.operators.graph import street_count
-    _, edges = _driving_network(spark)
+    _, edges = world.driving_network
     return street_count(edges)
 
 
-def _q_degrees(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _q_degrees(world: World) -> DataFrame:
     from pyrosm_spark.operators.graph import degrees
     from pyrosm_spark.operators.network import directed_edges
 
-    _, edges = _driving_network(spark)
+    _, edges = world.driving_network
     d = directed_edges(edges, "driving")
     return degrees(d)
 
 
-def _q_simplify(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _q_simplify(world: World) -> DataFrame:
     """A4/A8/W4 — undirected degree-2 chain collapse. Chains are
     orientation-canonicalized (least/greatest endpoint) and the way-id
-    set is serialized to a comma string so the external harness can
-    sort/hash the rows (array cells are unhashable in its
-    canonicalizer)."""
+    set is serialized to a comma string so the rows sort and hash
+    (array cells are unhashable)."""
     from pyrosm_spark.operators.graph import simplify_chains
-    _, edges = _driving_network(spark)
+    _, edges = world.driving_network
     s = simplify_chains(edges)
     return s.select(
         F.least("u", "v").alias("u"),
@@ -966,15 +659,15 @@ def _q_simplify(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _q_simplify_directed(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _q_simplify_directed(world: World) -> DataFrame:
     """X2 full form — OSMnx endpoint rules 1-5 (pure-SQL detection)
     + directed chain walk, attribute-uniform on highway. Array columns
-    (way_ids, highway_values) are serialized to comma strings for the
-    harness canonicalizer; directed chains keep their orientation."""
+    (way_ids, highway_values) are serialized to comma strings so the
+    rows sort; directed chains keep their orientation."""
     from pyrosm_spark.operators.graph import simplify_directed_chains
     from pyrosm_spark.operators.network import directed_edges
 
-    _, edges = _driving_network(spark)
+    _, edges = world.driving_network
     d = directed_edges(edges, "driving").withColumn(
         "highway", F.col("tags")["highway"])
     out = simplify_directed_chains(d, edge_attr_cols=("highway",))
@@ -986,30 +679,13 @@ def _q_simplify_directed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _q_largest_component(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _q_largest_component(world: World) -> DataFrame:
     from pyrosm_spark.operators.graph import largest_component_edges
-    _, edges = _driving_network(spark)
+    _, edges = world.driving_network
     return largest_component_edges(edges).select("id", "u", "v")
 
 
-def _q_stream_windowed_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming windowed aggregation driven to completion over the sf
-    events (memory sink); result equals the batch window aggregation —
-    oracle-checked via the batch SQL form."""
-    from pyrosm_spark.streaming.ingest import (
-        read_events_stream,
-        run_to_memory,
-        windowed_event_counts,
-    )
-
-    stream = read_events_stream(
-        spark, os.path.join(sf_dir, "events.parquet"))
-    run_to_memory(windowed_event_counts(stream), "q_win_events",
-                  output_mode="complete")
-    return spark.sql("SELECT * FROM q_win_events")
-
-
-def _q_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _q_decode_features(world: World) -> DataFrame:
     """Image decode + invariants — GENERATOR-DIFFERENTIAL oracle: the
     stored phash/h/w columns were computed by the independent
     pyarrow/numpy generator at table-build time, so comparing the
@@ -1018,156 +694,56 @@ def _q_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     means stay engine-only (not reproducible in SQL)."""
     from pyrosm_spark.operators.multimodal import decode_features
 
-    return decode_features(_images(spark)).select(
+    return decode_features(world.images()).select(
         "image_id", "ok", "h", "w", "phash_computed", "phash_match",
         "caption_len")
 
 
-def _q_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Video frame sampling over the synthetic vid1 table — every 2nd
-    frame's shape + phash per clip, value-checked against the
-    GENERATOR-side per-frame phashes stored in the table (the image
-    decode oracle's contract extended to the temporal axis)."""
-    from pyrosm_spark.operators.multimodal import frame_sample
-
-    _ensure_synth()
-    vids = spark.read.parquet(os.path.join(SYNTH_DIR, "videos.parquet"))
-    return frame_sample(vids, every_n=2).select(
-        "video_id", "frame_idx", "ok", "w", "h", "phash")
-
-
-def _q_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Audio modality plumbing: real pcm16 numpy decode + per-row
-    stubbed compressed formats (mapInPandas, Arrow batches)."""
-    from pyrosm_spark.operators.multimodal import audio_features
-    from pyrosm_spark.synth import ensure_audio_table
-
-    path = os.path.join(SYNTH_DIR, "audio.parquet")
-    ensure_audio_table(path, n_rows=500, seed=42)
-    return audio_features(spark.read.parquet(path)).select(
-        "audio_id", "ok", "n_samples", "duration_ms_computed",
-        "duration_match")
-
-
-def _apply_session_tuning(spark: SparkSession) -> None:
-    """Defensive session tuning shared by ``entry()`` and every gate
-    query (``_tuned``): the harness's SparkSession config is outside
-    our control — a default ``shuffle.partitions=200`` turns every tiny
-    sf0.01 shuffle into 200 near-empty tasks. Idempotent,
-    value-neutral; ``SPARK_GRAFT_NO_TUNE`` bypasses (plan_audit)."""
-    if os.environ.get("SPARK_GRAFT_NO_TUNE"):
-        return
-    try:
-        spark.conf.set("spark.sql.adaptive.enabled", "true")
-        spark.conf.set(
-            "spark.sql.adaptive.coalescePartitions.enabled", "true")
-        if int(spark.conf.get(
-                "spark.sql.shuffle.partitions", "200")) > 64:
-            spark.conf.set("spark.sql.shuffle.partitions", "32")
-    except Exception:
-        pass  # conf may be read-only on some deployments
-
-
-def _tuned(fn):
-    """Wrap a gate query with :func:`_apply_session_tuning`."""
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        _apply_session_tuning(spark)
-        return fn(spark, sf_dir)
-
-    run.__name__ = getattr(fn, "__name__", "query")
-    run.__doc__ = fn.__doc__
-    return run
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    qs = {
-        # OLDEST-RECORD-FIRST ordering (r3 verdict item 5, re-rotated
-        # for r5 per r4 verdict item 2): the external harness records
-        # rows in dict order and truncates the tail at ~50 queries
-        # (r1 lost 1, r2 lost 3, r3 lost 16, r4 lost 17 — exactly the
-        # dict tail each time), so the suite leads with the queries
-        # whose driver evidence is most stale.
-        #
-        # Block 1 — the 17 queries CORRECTNESS_r04 did not reach (last
-        # driver rows r02/r03; judge re-verified green on the r4 tree):
-        # these must produce fresh r5 rows so every query ends the
-        # project with a driver row <= 1 round old.
-        "latest_history_nodes": _q_latest_history,
-        "tag_presentation_ways": _q_tag_presentation_ways,
-        "id_tag_rename": _q_id_tag_rename,
-        "street_count_driving": _q_street_count,
-        "degrees_directed_driving": _q_degrees,
-        "stream_windowed_events": _q_stream_windowed_events,
-        "tile_assignment": _q_tile_assignment,
-        "tile_counts": _q_tile_counts,
-        "checkpointed_tile_counts": _q_checkpointed_tile_counts,
-        "pip_bbox_join": _q_pip_bbox,
-        "largest_weak_component": _q_largest_component,
-        "simplify_chains_driving": _q_simplify,
-        "simplify_directed_osmnx": _q_simplify_directed,
-        "knn_images_pois": _q_knn,
-        "tpch_q1_pricing": _q_tpch_q1,
-        "revenue_by_nation": _q_revenue_by_nation,
-        "rollup_orders": _q_rollup_orders,
-        # Block 2 — r04-green queries whose code paths changed in r5
-        # (cover memo: PIP/raster; write_pbf publish race + repack;
-        # phash/dedup pin tags), freshest-risk first. pbf_roundtrip_*
-        # exercise the writer that changed, so all three stay inside
-        # the recorded window.
-        "pip_left_join": _q_pip_left,
-        "pip_compact_join": _q_pip_compact,
-        "pip_auto_join": _q_pip_auto,
-        "raster_polygon_join": _q_raster_polygon,
-        "boundaries_admin": _q_boundaries,
-        "pip_exact_join": _q_pip_exact,
-        "pip_exact_ways": _q_pip_exact_ways,
-        "pbf_roundtrip_ways": _q_pbf_roundtrip_ways,
-        "pbf_roundtrip_relations": _q_pbf_roundtrip_relations,
-        "pbf_roundtrip_nodes": _q_pbf_roundtrip_nodes,
-        "pbf_scan_summary": _q_pbf_scan_summary,
-        "buildings_relations_helsinki": _q_buildings_relations_helsinki,
-        "analyze_documents": _q_analyze_documents,
-        "exact_dedup": _q_exact_dedup,
-        "ngram_jaccard_pairs": _q_ngram_jaccard,
-        "minhash_signatures": _q_minhash_signatures,
-        "minhash_lsh_pairs": _q_minhash_lsh_pairs,
-        "embedding_cosine_pairs": _q_embedding_cosine,
-        "embedding_lsh_pairs": _q_embedding_lsh_pairs,
-        "near_dup_clusters": _q_near_dup_clusters,
-        "cosine_topk": _q_cosine_topk,
-        "phash_pairs": _q_phash_pairs,
-        "simhash_pairs": _q_simhash_pairs,
-        "ann_lsh_topk": _q_ann_lsh,
-        "ann_ivf_topk": _q_ann_ivf,
-        "topk_parts_per_brand": _q_topk_parts_per_brand,
-        "events_hourly": _q_events_hourly,
-        "user_running_total": _q_user_running_total,
-        "decode_features": _q_decode_features,
-        "audio_features": _q_audio_features,
-        # Block 3 — r04-green, code untouched in r5; the harness tail
-        # lands here (every entry below has a green r04 driver row).
-        "frame_sample_videos": _q_frame_sample,
-        "tile_adaptive_split": _q_tile_adaptive,
-        "zorder_pruned_scan": _q_zorder_scan,
-        "training_shards": _q_training_shards,
-        "knn_escalating": _q_knn_complete,
-        "ann_ivfpq_topk": _q_ann_ivfpq,
-        "network_driving_edges": _q_network_edges("driving"),
-        "network_walking_edges": _q_network_edges("walking"),
-        "network_cycling_edges": _q_network_edges("cycling"),
-        "network_all_edges": _q_network_edges("all"),
-        "network_driving_psv_edges": _q_network_edges("driving+psv"),
-        "network_driving_segments": _q_network_segments,
-        "directed_edges_driving": _q_directed_edges,
-        "buildings_ways": _q_buildings_ways,
-        "pois_nodes": _q_pois_nodes,
-        "bbox_complete_ways": _q_bbox_ways,
-        "custom_bracket_network": _q_custom_bracket_network,
-        "crop_bbox_cascade": _q_crop,
-        "straddling_relations": _q_straddling_relations,
-        "latest_node_version": _q_latest_node_version,
-    }
-    return {name: _tuned(fn) for name, fn in qs.items()}
+QUERIES = {
+    "buildings_ways": _q_buildings_ways,
+    "buildings_relations_helsinki": _q_buildings_relations_helsinki,
+    "pois_nodes": _q_pois_nodes,
+    "boundaries_admin": _q_boundaries,
+    "tag_presentation_ways": _q_tag_presentation_ways,
+    "id_tag_rename": _q_id_tag_rename,
+    "custom_bracket_network": _q_custom_bracket_network,
+    "network_driving_edges": _q_network_edges("driving"),
+    "network_walking_edges": _q_network_edges("walking"),
+    "network_cycling_edges": _q_network_edges("cycling"),
+    "network_all_edges": _q_network_edges("all"),
+    "network_driving_psv_edges": _q_network_edges("driving+psv"),
+    "network_driving_segments": _q_network_segments,
+    "directed_edges_driving": _q_directed_edges,
+    "bbox_complete_ways": _q_bbox_ways,
+    "crop_bbox_cascade": _q_crop,
+    "straddling_relations": _q_straddling_relations,
+    "latest_node_version": _q_latest_node_version,
+    "latest_history_nodes": _q_latest_history,
+    "pbf_roundtrip_nodes": _q_pbf_roundtrip_nodes,
+    "pbf_roundtrip_ways": _q_pbf_roundtrip_ways,
+    "pbf_roundtrip_relations": _q_pbf_roundtrip_relations,
+    "pbf_scan_summary": _q_pbf_scan_summary,
+    "tile_assignment": _q_tile_assignment,
+    "tile_counts": _q_tile_counts,
+    "checkpointed_tile_counts": _q_checkpointed_tile_counts,
+    "tile_adaptive_split": _q_tile_adaptive,
+    "zorder_pruned_scan": _q_zorder_scan,
+    "pip_bbox_join": _q_pip_bbox,
+    "pip_exact_join": _q_pip_exact,
+    "pip_exact_ways": _q_pip_exact_ways,
+    "pip_left_join": _q_pip_left,
+    "pip_compact_join": _q_pip_compact,
+    "pip_auto_join": _q_pip_auto,
+    "raster_polygon_join": _q_raster_polygon,
+    "knn_images_pois": _q_knn,
+    "knn_escalating": _q_knn_complete,
+    "street_count_driving": _q_street_count,
+    "degrees_directed_driving": _q_degrees,
+    "largest_weak_component": _q_largest_component,
+    "simplify_chains_driving": _q_simplify,
+    "simplify_directed_osmnx": _q_simplify_directed,
+    "decode_features": _q_decode_features,
+}
 
 
 # ==========================================================================
@@ -1403,28 +979,6 @@ def _zorder_scan_sql() -> str:
         f"{grid_y_sql('lat', _ZORDER_RES)} AS gy FROM {IMG} "
         f"WHERE lon BETWEEN {x0} AND {x1} "
         f"AND lat BETWEEN {y0} AND {y1})"
-    )
-
-
-def _training_shards_sql() -> str:
-    """Mirror of ``_q_training_shards``: a single global row_number
-    window over (zkey, image_id) — the formulation the distributed
-    bucketed assignment must equal exactly."""
-    from pyrosm_spark.functions.tiles import grid_x_sql, grid_y_sql
-    from pyrosm_spark.sources.layout import morton_key_sql_from_xy
-
-    z = morton_key_sql_from_xy("gx", "gy")
-    return (
-        f"WITH k AS (SELECT image_id, {z} AS zkey FROM ("
-        f"SELECT image_id, "
-        f"{grid_x_sql('lon', _ZORDER_RES)} AS gx, "
-        f"{grid_y_sql('lat', _ZORDER_RES)} AS gy FROM {IMG})), "
-        f"r AS (SELECT image_id, zkey, "
-        f"row_number() OVER (ORDER BY zkey, image_id) - 1 AS i FROM k) "
-        f"SELECT i // 256 AS shard, count(*) AS n, "
-        f"min(image_id) AS first_id, max(image_id) AS last_id, "
-        f"min(zkey) AS min_zkey, max(zkey) AS max_zkey "
-        f"FROM r GROUP BY 1"
     )
 
 
@@ -2052,26 +1606,6 @@ _LATEST_SQL = f"""
 
 
 def oracle_sql() -> dict[str, str]:
-    from pyrosm_spark.operators.dedup import (
-        embedding_cosine_sql,
-        exact_dedup_sql,
-        minhash_lsh_pairs_sql,
-        near_dup_clusters_sql,
-        minhash_signature_sql,
-        ngram_jaccard_sql,
-        phash_pairs_sql,
-        simhash_pairs_sql,
-    )
-    from pyrosm_spark.operators.similarity import (
-        ann_ivf_sql,
-        ann_ivfpq_sql,
-        ann_lsh_sql,
-        cosine_topk_sql,
-        lsh_cosine_pairs_sql,
-    )
-    from pyrosm_spark.operators.text import analyze_documents_sql
-
-    _ensure_synth()
     knn = _KNN_SQL.format(hav=_hav_sql("q.lat", "q.lon", "p.lat", "p.lon"))
     return {
         # golden-snapshot oracle: DuckDB cannot decode PBF or assemble
@@ -2256,18 +1790,10 @@ def oracle_sql() -> dict[str, str]:
             FROM nb LEFT JOIN o ON o.node = nb.node
             LEFT JOIN i ON i.node = nb.node
         """,
-        "stream_windowed_events": """
-            SELECT strftime(
-                       to_timestamp(floor(epoch(ts) / 300) * 300),
-                       '%Y-%m-%d %H:%M:%S') AS win_start,
-                   event_type, count(*) AS n, round(sum(value), 6) AS v
-            FROM events GROUP BY 1, 2
-        """,
         "tile_assignment": _tile_sql(15, agg=False),
         "tile_counts": _tile_sql(12, agg=True),
         "tile_adaptive_split": _tile_adaptive_sql(12, 3, 4.0),
         "zorder_pruned_scan": _zorder_scan_sql(),
-        "training_shards": _training_shards_sql(),
         "checkpointed_tile_counts": _tile_sql(12, agg=True),
         "pip_bbox_join": _PIP_BBOX_SQL,
         "pip_exact_ways": _PIP_EXACT_WAYS_SQL,
@@ -2293,87 +1819,6 @@ def oracle_sql() -> dict[str, str]:
         "simplify_directed_osmnx": _simplify_directed_sql(),
         "knn_images_pois": knn,
         "knn_escalating": _knn_complete_sql(),
-        "tpch_q1_pricing": """
-            SELECT l_returnflag, l_linestatus,
-                   round(sum(l_quantity), 3) AS sum_qty,
-                   round(sum(l_extendedprice), 3) AS sum_base_price,
-                   round(sum(l_extendedprice * (1 - l_discount)), 3)
-                       AS sum_disc_price,
-                   round(sum(l_extendedprice * (1 - l_discount)
-                             * (1 + l_tax)), 3) AS sum_charge,
-                   round(avg(l_quantity), 6) AS avg_qty,
-                   round(avg(l_discount), 6) AS avg_disc,
-                   count(*) AS count_order
-            FROM lineitem
-            WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
-            GROUP BY l_returnflag, l_linestatus
-        """,
-        "revenue_by_nation": """
-            SELECT n_name, round(sum(o_totalprice), 3) AS revenue,
-                   count(*) AS n_orders
-            FROM orders
-            JOIN customer ON o_custkey = c_custkey
-            JOIN nation ON c_nationkey = n_nationkey
-            GROUP BY n_name
-        """,
-        "rollup_orders": """
-            SELECT o_orderpriority, o_orderstatus, count(*) AS n,
-                   round(sum(o_totalprice), 3) AS total
-            FROM orders GROUP BY ROLLUP(o_orderpriority, o_orderstatus)
-        """,
-        "topk_parts_per_brand": """
-            SELECT p_brand, p_partkey, p_retailprice, CAST(rk AS INT) AS rk
-            FROM (
-                SELECT p_brand, p_partkey, p_retailprice,
-                       row_number() OVER (PARTITION BY p_brand
-                           ORDER BY p_retailprice DESC, p_partkey ASC) AS rk
-                FROM part
-            ) WHERE rk <= 3
-        """,
-        "events_hourly": """
-            SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S')
-                       AS hour,
-                   event_type, count(*) AS n, round(sum(value), 6) AS v
-            FROM events GROUP BY 1, 2
-        """,
-        "user_running_total": """
-            SELECT event_id, user_id,
-                   round(sum(value) OVER (
-                       PARTITION BY user_id ORDER BY ts ASC, event_id ASC
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-                   ), 6) AS running_value
-            FROM events WHERE user_id < 20
-        """,
-        "analyze_documents": analyze_documents_sql("documents"),
-        "exact_dedup": exact_dedup_sql("documents"),
-        "ngram_jaccard_pairs": ngram_jaccard_sql("documents", 0.2),
-        "minhash_signatures": minhash_signature_sql("documents"),
-        "minhash_lsh_pairs": minhash_lsh_pairs_sql("documents"),
-        "near_dup_clusters": near_dup_clusters_sql("documents"),
-        "embedding_cosine_pairs": embedding_cosine_sql("embeddings", 0.9),
-        "embedding_lsh_pairs": lsh_cosine_pairs_sql("embeddings", 0.35),
-        "cosine_topk": cosine_topk_sql("embeddings", 5, "q.vec_id < 20"),
-        "ann_lsh_topk": ann_lsh_sql("embeddings", 5),
-        # the driver's correctness gate runs at sf0.01 (spec) — the IVF
-        # codebook is re-derived from that table's deterministic
-        # id-ordered sample, matching what the Spark query trains on;
-        # override the dir via SPARK_GRAFT_ORACLE_SF_DIR to run the
-        # local gate replica at another scale
-        "ann_ivf_topk": ann_ivf_sql(
-            os.path.join(
-                os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR",
-                               "/root/testdata/sf0.01"),
-                "embeddings.parquet"),
-            "embeddings", k=5, n_cells=8, nprobe=4),
-        "ann_ivfpq_topk": ann_ivfpq_sql(
-            os.path.join(
-                os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR",
-                               "/root/testdata/sf0.01"),
-                "embeddings.parquet"),
-            "embeddings", k=5, n_cells=8, nprobe=4, m=4, kc=16),
-        "phash_pairs": phash_pairs_sql(
-            os.path.join(SYNTH_DIR, "images.parquet"), 4),
-        "simhash_pairs": simhash_pairs_sql("documents", 8),
         # generator-differential: the stored phash/h/w are the
         # independent reference values for the engine's decode output
         "decode_features": f"""
@@ -2383,48 +1828,40 @@ def oracle_sql() -> dict[str, str]:
                    CAST(length(caption) AS INT) AS caption_len
             FROM {IMG} WHERE bytes IS NOT NULL
         """,
-        "frame_sample_videos": f"""
-            SELECT video_id, CAST(i - 1 AS INT) AS frame_idx,
-                   CAST(1 AS BOOLEAN) AS ok, w, h,
-                   frame_phashes[i] AS phash
-            FROM read_parquet('{SYNTH_DIR}/videos.parquet'),
-                 unnest(generate_series(1, n_frames, 2)) AS t(i)
-        """,
-        # generator-differential audio oracle: frame count and duration
-        # derive exactly from the payload length + stored metadata
-        # (banker's rounding mirrored for the .5 duration boundary)
-        "audio_features": f"""
-            WITH a AS (
-                SELECT audio_id, fmt, duration_ms,
-                       (fmt = 'pcm16'
-                        AND octet_length(bytes)
-                            % (2 * n_channels) = 0) AS ok,
-                       CAST(octet_length(bytes) / (2 * n_channels)
-                            AS BIGINT) AS frames,
-                       sample_rate
-                FROM read_parquet('{SYNTH_DIR}/audio.parquet')
-            ),
-            v AS (
-                SELECT *, frames * 1000.0 / sample_rate AS val
-                FROM a
-            )
-            SELECT audio_id, ok,
-                   CASE WHEN ok THEN CAST(frames AS INT) END AS n_samples,
-                   CASE WHEN NOT ok THEN NULL
-                        WHEN val - floor(val) = 0.5
-                        THEN CAST(floor(val)
-                                  + CAST(floor(val) AS BIGINT) % 2 AS INT)
-                        ELSE CAST(round(val) AS INT)
-                   END AS duration_ms_computed,
-                   CASE WHEN ok THEN
-                       (CASE WHEN val - floor(val) = 0.5
-                             THEN CAST(floor(val)
-                                  + CAST(floor(val) AS BIGINT) % 2 AS INT)
-                             ELSE CAST(round(val) AS INT) END)
-                       = duration_ms
-                   END AS duration_match
-            FROM v
-        """,
-        # every queries() entry now carries a value oracle (50/50):
-        # binary ops check against generator-side stored references
     }
+
+
+# ==========================================================================
+# Compare
+# ==========================================================================
+
+def _normalized(rows) -> list:
+    """Rows with floats rounded to 5 places (NaN as a string), sorted
+    by their string form: an order-insensitive canonical form."""
+    out = []
+    for r in rows:
+        out.append(tuple(
+            ("nan" if math.isnan(v) else round(v, 5))
+            if isinstance(v, float) else v
+            for v in r))
+    return sorted(out, key=lambda t: tuple(str(x) for x in t))
+
+
+def assert_matches(df: DataFrame, con, sql: str) -> None:
+    """Assert that ``df`` equals the DuckDB result of ``sql`` on
+    connection ``con``: the same column names, the same row count and,
+    after sorting, the same values row by row (floats within 1e-5)."""
+    cols = sorted(df.columns)
+    got = _normalized(tuple(r[c] for c in cols) for r in df.collect())
+    cur = con.execute(sql)
+    ocols = [d[0] for d in cur.description]
+    assert cols == sorted(ocols), f"columns {cols} != {sorted(ocols)}"
+    order = [ocols.index(c) for c in cols]
+    exp = _normalized(tuple(r[i] for i in order) for r in cur.fetchall())
+    assert len(got) == len(exp), f"rows {len(got)} != {len(exp)}"
+    for i, (g, e) in enumerate(zip(got, exp)):
+        for gv, ev in zip(g, e):
+            same = (math.isclose(gv, ev, rel_tol=1e-5, abs_tol=1e-5)
+                    if isinstance(gv, float) and isinstance(ev, float)
+                    else gv == ev)
+            assert same, f"row {i}: got {g}, expected {e}"

@@ -14,7 +14,6 @@ import numpy as np
 import pandas as pd
 
 from pyrosm_spark.functions import geometry_np as G
-from pyrosm_spark.operators.dedup import simhash64
 from pyrosm_spark.operators.geometry import (
     point_geometry_wkb,
     segment_geometry_wkb,
@@ -122,27 +121,6 @@ def test_relation_empty_batch():
     out = relation_geometry_wkb.func(pd.Series([], dtype=object),
                                      pd.Series([], dtype=bool))
     assert len(out) == 0
-
-
-# -- simhash kernel ----------------------------------------------------------
-
-def test_simhash_null_empty_whitespace_yield_none():
-    out = simhash64.func(pd.Series([None, "", "   \t  ", "real text"]))
-    assert out[0] is None and out[1] is None and out[2] is None
-    assert out[3] is not None
-
-
-def test_simhash_deterministic_and_case_insensitive():
-    a = simhash64.func(pd.Series(["Hello World", "hello world"]))
-    assert a[0] == a[1]
-    b = simhash64.func(pd.Series(["hello world"]))
-    assert b[0] == a[0]  # batch-independent
-
-
-def test_simhash_empty_batch_and_all_null_batch():
-    assert len(simhash64.func(pd.Series([], dtype=object))) == 0
-    out = simhash64.func(pd.Series([None, None]))
-    assert list(out) == [None, None]
 
 
 # -- spatial-join kernels ----------------------------------------------------
@@ -257,57 +235,3 @@ def test_ivf_assign_nprobe_and_empty_batch():
         d = ((cent - v) ** 2).sum(axis=1)
         np.testing.assert_array_equal(cells, np.argsort(d, kind="stable")[:2])
     assert len(assign(pd.Series([], dtype=object))) == 0
-
-
-def test_phash_pair_kernels_contract():
-    """Direct .func-level contracts for the phash pair-enumeration
-    kernels (no Spark): popcount vs int.bit_count, first-zero-chunk vs
-    a per-chunk reference (incl. the no-zero-chunk -> 3 convention),
-    _emit_pairs ordering / self-pair suppression / empty batches."""
-    from pyrosm_spark.operators.dedup import (
-        _emit_pairs, _first_zero_chunk, _hamming64, _triangle_indices)
-
-    rng = np.random.RandomState(7)
-    x = rng.randint(-2 ** 62, 2 ** 62, size=257, dtype=np.int64)
-    x[0], x[1], x[2] = 0, -1, 1 << 16
-    got = _hamming64(x)
-    exp = [int(v).bit_count() for v in x.astype(np.uint64).tolist()]
-    np.testing.assert_array_equal(got, exp)
-
-    fz = _first_zero_chunk(x)
-    for v, f in zip(x.astype(np.uint64).tolist(), fz):
-        chunks = [(int(v) >> (16 * i)) & 0xFFFF for i in range(4)]
-        want = next((i for i, c in enumerate(chunks) if c == 0), 3)
-        assert f == want, hex(v)
-
-    # empty batches
-    e = np.array([], dtype=np.int64)
-    assert _hamming64(e).size == 0 and _first_zero_chunk(e).size == 0
-    ids = np.array(["a", "b", "c", "b"], dtype=object)
-    phs = np.array([0b0, 0b11, 1 << 17, 0b11], dtype=np.int64)
-    empty_idx = np.array([], dtype=np.int64)
-    assert _emit_pairs(ids, empty_idx, empty_idx, phs, 0, 6) is None
-
-    # all-pairs triangle over one 4-row segment
-    left, right = _triangle_indices(np.array([4]))
-    # band 0 = pairs whose FIRST matching 16-bit chunk is chunk 0:
-    # only (a,c) (xor = 1<<17: chunk0 zero, ham 1). (b,b) xor=0 would
-    # be band 0 / ham 0 but is a self-pair -> suppressed.
-    out = _emit_pairs(ids, left, right, phs, 0, 6)
-    pairs = {(r.img_a, r.img_b, r.hamming) for r in out.itertuples()}
-    assert pairs == {("a", "c", 1)}
-    # band 1: (a,b) xor=3 (chunk0 nonzero, chunk1 zero, ham 2); the
-    # duplicate-id b row collapses into the same set entry
-    out1 = _emit_pairs(ids, left, right, phs, 1, 6)
-    pairs1 = {(r.img_a, r.img_b, r.hamming) for r in out1.itertuples()}
-    assert pairs1 == {("a", "b", 2)}
-    # band 2: (b,c) xor=0x20003 — chunks 0 and 1 nonzero, chunk2 zero
-    out2 = _emit_pairs(ids, left, right, phs, 2, 6)
-    pairs2 = {(r.img_a, r.img_b, r.hamming) for r in out2.itertuples()}
-    assert pairs2 == {("b", "c", 3)}
-    # ordering: img_a < img_b always
-    assert (out2.img_a < out2.img_b).all()
-    # hamming cap kills the ham-3 pair
-    assert _emit_pairs(ids, left, right, phs, 2, 2) is None
-    # band with no first-match pairs -> nothing survives
-    assert _emit_pairs(ids, left, right, phs, 3, 6) is None

@@ -1074,3 +1074,37 @@ def test_to_igraph_pandana_fallback_end_to_end(spark, synth_dir):
     for t in reach:
         assert abs(net.shortest_path_length(src_label, t, "length")
                    - expect[t]) < 1e-6
+
+
+def test_cc_recursion_keeps_every_level_pinned(spark, monkeypatch):
+    """contraction_rounds=0 on a graph over max_driver_edges recurses
+    with the outer labels un-checkpointed, so the final
+    labels.join(mapping) reads the outer undirected-edge pin. A
+    recursive call must not release it: every level's pin is still
+    live when the final join runs, and the components equal
+    networkx's."""
+    nx = pytest.importorskip("networkx")
+    from pyrosm_spark.operators import spatial_join as SJ
+
+    pinned = []
+    real_pin = SJ._pin
+
+    def recording_pin(tag, df):
+        out = real_pin(tag, df)
+        pinned.append(out)
+        return out
+
+    monkeypatch.setattr(SJ, "_pin", recording_pin)
+    rng = np.random.default_rng(11)
+    rows = [(int(a), int(b)) for a, b in rng.integers(0, 40, (30, 2))]
+    df = spark.createDataFrame(rows, "u long, v long")
+    out = connected_components(df, contraction_rounds=0,
+                               max_driver_edges=8)
+    assert len(pinned) >= 2, "no recursion happened"
+    assert all(p.storageLevel.useMemory or p.storageLevel.useDisk
+               for p in pinned), "a recursion level released a pin"
+    got = {r["node"]: r["comp"] for r in out.collect()}
+    g = nx.Graph()
+    g.add_edges_from(rows)
+    exp = {n: min(c) for c in nx.connected_components(g) for n in c}
+    assert got == exp

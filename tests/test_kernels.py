@@ -194,20 +194,6 @@ def test_interlaced_png_rejected_explicitly():
         I.decode_png(bytes(buf))
 
 
-def test_vid_info_error_contract():
-    """Recognized real containers -> NotImplementedError (missing
-    capability); malformed junk -> ValueError (bad data), matching the
-    decode_png/decode_qimg contract for per-row skip loops."""
-    with pytest.raises(NotImplementedError, match="mp4"):
-        I.vid_info(b"\x00\x00\x00\x18ftypisom\x00\x00\x00\x00")
-    with pytest.raises(NotImplementedError, match="avi"):
-        I.vid_info(b"RIFF\x00\x00\x00\x00AVI ")
-    with pytest.raises(ValueError):
-        I.vid_info(b"\x00\x00mp4garbage")
-    with pytest.raises(ValueError):
-        I.vid_info(b"")
-
-
 def test_phash_deterministic_and_distinct():
     a = I.phash64(I.synth_pixels(1, 16, 16))
     b = I.phash64(I.synth_pixels(1, 16, 16))

@@ -1,8 +1,9 @@
-"""Training-data pipeline ops vs their DuckDB oracle SQL.
+"""Similarity operators vs their DuckDB oracle SQL, plus the image
+decode and graph dispatch checks that ride in this module.
 
-This mirrors exactly what the driver's correctness gate does: run the
-Spark DataFrame op and the oracle SQL on the same parquet, compare
-sorted values — so any mismatch shows up here first.
+The oracle tests run the Spark DataFrame op and the oracle SQL on the
+same parquet and compare sorted values, so any mismatch shows up here
+first.
 """
 
 import math
@@ -12,17 +13,10 @@ import duckdb
 import pytest
 from pyspark.sql import functions as F
 
-from pyrosm_spark.operators import dedup as D
 from pyrosm_spark.operators import multimodal as M
 from pyrosm_spark.operators import similarity as S
-from pyrosm_spark.operators import text as TX
 
 SF_DIR = "/root/testdata/sf0.001"
-
-
-@pytest.fixture(scope="module")
-def docs(spark):
-    return spark.read.parquet(f"{SF_DIR}/documents.parquet")
 
 
 @pytest.fixture(scope="module")
@@ -33,11 +27,10 @@ def emb(spark):
 @pytest.fixture(scope="module")
 def duck():
     con = duckdb.connect()
-    for name in ("documents", "embeddings"):
-        con.execute(
-            f"CREATE VIEW {name} AS SELECT * FROM "
-            f"read_parquet('{SF_DIR}/{name}.parquet')"
-        )
+    con.execute(
+        "CREATE VIEW embeddings AS SELECT * FROM "
+        f"read_parquet('{SF_DIR}/embeddings.parquet')"
+    )
     return con
 
 
@@ -74,42 +67,6 @@ def run_oracle(duck, sql):
     cur = duck.execute(sql)
     cols = [d[0] for d in cur.description]
     return cur.fetchall(), cols
-
-
-def test_analyze_documents_vs_oracle(spark, docs, duck):
-    got = TX.analyze_documents(docs)
-    rows, cols = run_oracle(duck, TX.analyze_documents_sql("documents"))
-    compare(got, rows, cols)
-
-
-def test_exact_dedup_vs_oracle(spark, docs, duck):
-    got = D.exact_dedup(docs)
-    rows, cols = run_oracle(duck, D.exact_dedup_sql("documents"))
-    compare(got, rows, cols)
-
-
-def test_ngram_jaccard_vs_oracle(spark, docs, duck):
-    got = D.ngram_jaccard_pairs(docs, threshold=0.2)
-    rows, cols = run_oracle(duck, D.ngram_jaccard_sql("documents", 0.2))
-    compare(got, rows, cols)
-
-
-def test_minhash_signatures_vs_oracle(spark, docs, duck):
-    got = D.minhash_signatures(docs)
-    rows, cols = run_oracle(duck, D.minhash_signature_sql("documents"))
-    compare(got, rows, cols)
-
-
-def test_minhash_lsh_pairs_vs_oracle(spark, docs, duck):
-    got = D.minhash_lsh_pairs(docs)
-    rows, cols = run_oracle(duck, D.minhash_lsh_pairs_sql("documents"))
-    compare(got, rows, cols)
-
-
-def test_embedding_cosine_vs_oracle(spark, emb, duck):
-    got = D.embedding_cosine_pairs(emb, threshold=0.9)
-    rows, cols = run_oracle(duck, D.embedding_cosine_sql("embeddings", 0.9))
-    compare(got, rows, cols)
 
 
 def test_cosine_topk_vs_oracle(spark, emb, duck):
@@ -216,398 +173,10 @@ def test_codebook_training_input_validation():
         S.pq_codebooks_from_sample(mat, m=5, kc=4)
 
 
-def test_simhash_pairs_properties(spark, docs):
-    pairs = D.simhash_pairs(docs, max_hamming=16)
-    rows = pairs.collect()
-    for r in rows:
-        assert 0 <= r["hamming"] <= 16
-        assert r["doc_a"] < r["doc_b"]
-    # deterministic across executions
-    again = {(r["doc_a"], r["doc_b"]) for r in
-             D.simhash_pairs(docs, max_hamming=16).collect()}
-    assert again == {(r["doc_a"], r["doc_b"]) for r in rows}
-
-
-def test_phash_pairs_vs_oracle(spark, synth_dir, duck):
-    path = os.path.join(synth_dir, "images.parquet")
-    images = spark.read.parquet(path)
-    got = D.phash_pairs(images, max_hamming=4)
-    rows, cols = run_oracle(duck, D.phash_pairs_sql(path, 4))
-    compare(got, rows, cols)
-
-
-def test_decode_features_invariants(spark, synth_dir):
-    images = spark.read.parquet(os.path.join(synth_dir, "images.parquet"))
-    feats = M.decode_features(images)
-    rows = feats.collect()
-    assert len(rows) == images.filter(F.col("bytes").isNotNull()).count()
-    assert all(r["ok"] for r in rows)
-    assert all(r["phash_match"] for r in rows)
-
-
-def test_resize_images_roundtrip(spark, synth_dir):
-    from pyrosm_spark.functions.image_np import decode_png
-
-    images = spark.read.parquet(os.path.join(synth_dir, "images.parquet"))
-    small = M.resize_images(images.limit(50), 8, 8)
-    rows = small.collect()
-    assert len(rows) == 50
-    for r in rows:
-        px = decode_png(bytes(r["bytes"]))
-        assert px.shape == (8, 8, 3)
-
-
-def test_frame_sample_vid1(spark):
-    """Video frame sampling over the deterministic vid1 container:
-    every_n-th frame decoded for real (shape + phash), unsupported
-    containers degrade to per-row err records."""
-    from pyrosm_spark.functions import image_np as I
-
-    rows = [("v1", bytearray(I.synth_video(1, 16, 12, 7))),
-            ("v2", bytearray(I.synth_video(2, 8, 8, 3))),
-            # a RECOGNIZED real container (ISO BMFF 'ftyp' at offset 4)
-            # -> NotImplementedError (missing capability)...
-            ("bad", bytearray(b"\x00\x00\x00\x18ftypisom\x00" * 2)),
-            # ...while arbitrary junk is malformed DATA -> ValueError,
-            # the same contract as decode_png/decode_qimg
-            ("junk", bytearray(b"\x00\x00mp4garbage"))]
-    df = spark.createDataFrame(rows, "video_id string, bytes binary")
-    out = M.frame_sample(df, every_n=3).collect()
-    by_vid = {}
-    for r in out:
-        by_vid.setdefault(r["video_id"], []).append(r)
-    # v1: frames 0, 3, 6 sampled
-    f1 = sorted(r["frame_idx"] for r in by_vid["v1"])
-    assert f1 == [0, 3, 6]
-    for r in by_vid["v1"]:
-        assert r["ok"] and (r["w"], r["h"]) == (16, 12)
-        exp = I.phash64(I.decode_vid_frame(
-            I.synth_video(1, 16, 12, 7), r["frame_idx"]))
-        assert r["phash"] == exp
-    assert sorted(r["frame_idx"] for r in by_vid["v2"]) == [0]
-    (bad,) = by_vid["bad"]
-    assert not bad["ok"] and "NotImplementedError" in bad["err"]
-    (junk,) = by_vid["junk"]
-    assert not junk["ok"] and "ValueError" in junk["err"]
-
-
-def test_media_null_payloads_degrade_per_row(spark):
-    """NULL payload / NULL metadata rows become err records — a poison
-    row must never kill a 100 TB decode job mid-stage."""
-    from pyrosm_spark.functions import image_np as I
-    from pyrosm_spark.operators.multimodal import audio_features
-
-    vids = spark.createDataFrame(
-        [("v1", bytearray(I.synth_video(1, 8, 8, 2))), ("vnull", None)],
-        "video_id string, bytes binary")
-    out = {r["video_id"]: r for r in M.frame_sample(vids, 1).collect()
-           if r["frame_idx"] <= 0}
-    assert out["v1"]["ok"] and not out["vnull"]["ok"]
-    assert "null video payload" in out["vnull"]["err"]
-
-    aud = spark.createDataFrame(
-        [("a1", None, 8000, 1, "pcm16", 0),
-         ("a2", bytearray(b"\x00\x00" * 80), None, 1, "pcm16", 10)],
-        "audio_id string, bytes binary, sample_rate int, "
-        "n_channels int, fmt string, duration_ms int")
-    feats = {r["audio_id"]: r for r in audio_features(aud).collect()}
-    assert not feats["a1"]["ok"] and "null audio payload" in feats["a1"]["err"]
-    assert not feats["a2"]["ok"]  # null sample_rate -> err, not a crash
-
-
-def test_vid_frame_offsets_fast_path():
-    """Offset-table decode == per-call walk decode, every frame."""
-    from pyrosm_spark.functions import image_np as I
-
-    buf = I.synth_video(5, 10, 6, 9)
-    offs = I.vid_frame_offsets(buf)
-    assert len(offs) == 9
-    for i in range(9):
-        a = I.decode_vid_frame(buf, i)
-        b = I.decode_vid_frame(buf, i, offsets=offs)
-        assert (a == b).all()
-
-
-def test_composed_lsh_ops_keep_separate_pins(spark, docs):
-    """Composing two LSH operators into one lazy plan must not unpin
-    the first operator's banded frame (pin tags are namespaced per
-    operator — a shared tag made the second build release the first's
-    materialization before the action ran, silently re-executing the
-    banding subtree per consumer arm)."""
-    from pyrosm_spark.operators import spatial_join as SJ
-    SJ.release_pinned_caches()
-    mh = D.minhash_lsh_pairs(docs)       # pins minhash_lsh_banded
-    sh = D.simhash_pairs(docs, max_hamming=16)  # pins simhash_banded
-    assert SJ._PINNED.get("minhash_lsh_banded"), \
-        "minhash banded frame unpinned by the simhash build"
-    assert SJ._PINNED.get("simhash_banded")
-    # the composed action still runs with both frames pinned
-    both = (mh.select("doc_a", "doc_b")
-            .unionByName(sh.select("doc_a", "doc_b")).distinct())
-    assert both.count() > 0
-    assert SJ._PINNED.get("minhash_lsh_banded")
-    assert SJ._PINNED.get("simhash_banded")
-    SJ.release_pinned_caches()
-
-
-def test_interleaved_same_op_released_pin_recomputes(spark, docs):
-    """Pin-lifecycle contract under two interleaved pipelines of the
-    SAME operator in one session: the second call releases the first
-    call's pinned banded frame (per-tag lifecycle, spatial_join._pin),
-    so a still-unevaluated plan returned by the first call loses its
-    cache — and must RECOMPUTE from deterministic lineage, not fail or
-    change results. Correct-but-uncached is the documented semantics;
-    callers needing both hot keep one call per pipeline or pre-pin."""
-    from pyrosm_spark.operators import spatial_join as SJ
-    SJ.release_pinned_caches()
-    first = D.minhash_lsh_pairs(docs)    # pins minhash_lsh_banded #1
-    first_pins = list(SJ._PINNED.get("minhash_lsh_banded") or [])
-    assert first_pins
-    second = D.minhash_lsh_pairs(docs)   # releases #1, pins #2
-    now = SJ._PINNED.get("minhash_lsh_banded") or []
-    assert now and all(f is not g for f in first_pins for g in now), \
-        "second call must have released the first call's pin"
-    # (no storageLevel assertion: both calls produce the IDENTICAL
-    # logical plan, so the CacheManager lookup behind .storageLevel
-    # resolves the released frame to the second call's live cache
-    # entry — the registry identity above is the observable lifecycle)
-    # the first plan still evaluates — recomputed, identical pair set
-    a = {(r["doc_a"], r["doc_b"]) for r in first.collect()}
-    b = {(r["doc_a"], r["doc_b"]) for r in second.collect()}
-    assert a == b and len(a) > 0
-    SJ.release_pinned_caches()
-
-
-def test_blocked_self_join_equals_plain(spark, docs, synth_dir):
-    """Skew-blocked pair enumeration must produce the identical pair set."""
-    import os
-    plain = {(r["doc_a"], r["doc_b"]) for r in
-             D.minhash_lsh_pairs(docs).collect()}
-    blocked = {(r["doc_a"], r["doc_b"]) for r in
-               D.minhash_lsh_pairs(docs, n_blocks=4).collect()}
-    assert plain == blocked and len(plain) > 0
-    images = spark.read.parquet(os.path.join(synth_dir, "images.parquet"))
-    p1 = {(r["img_a"], r["img_b"], r["hamming"]) for r in
-          D.phash_pairs(images, max_hamming=4).collect()}
-    p2 = {(r["img_a"], r["img_b"], r["hamming"]) for r in
-          D.phash_pairs(images, max_hamming=4, n_blocks=8).collect()}
-    assert p1 == p2 and len(p1) > 0
-    # strategy differential: grouped numpy eval == native join, both
-    # with the hot-bucket path forced (threshold below synth bucket
-    # sizes) and without
-    p3 = {(r["img_a"], r["img_b"], r["hamming"]) for r in
-          D.phash_pairs(images, max_hamming=4, n_blocks=8,
-                        strategy="join").collect()}
-    p4 = {(r["img_a"], r["img_b"], r["hamming"]) for r in
-          D.phash_pairs_grouped(images, max_hamming=4, n_blocks=4,
-                                hot_threshold=20).collect()}
-    assert p1 == p3 == p4
-
-
-def test_audio_features_invariants(spark, tmp_path_factory):
-    """Audio modality plumbing: pcm16 rows decode for real (duration
-    invariant holds, energy/zcr in range); compressed rows surface the
-    stub error per row without failing the job."""
-    import os
-
-    from pyrosm_spark.operators.multimodal import audio_features
-    from pyrosm_spark.synth import ensure_audio_table
-
-    path = os.path.join(str(tmp_path_factory.mktemp("aud")), "audio.parquet")
-    ensure_audio_table(path, n_rows=100, seed=42)
-    audio = spark.read.parquet(path)
-    feats = audio_features(audio).collect()
-    assert len(feats) == 100
-    ok = [r for r in feats if r["ok"]]
-    bad = [r for r in feats if not r["ok"]]
-    assert len(bad) == 10  # every 10th row is the mp3 stub path
-    assert all("pcm16" in r["err"] for r in bad)
-    for r in ok:
-        assert r["duration_match"], r
-        assert 0.0 < r["rms"] < 1.0
-        assert 0.0 <= r["zcr"] <= 1.0
-        assert 0.0 < r["peak"] <= 1.0
-
-
-def test_audio_corrupt_metadata_degrades_per_row(spark):
-    """Corrupt/null metadata is a poison ROW, never a job failure or a
-    silent mis-decode: sample_rate 0/null must not ZeroDivisionError
-    the task, and null n_channels must not decode multi-channel
-    payloads as mono (ok=False + err instead)."""
-    import numpy as np
-
-    from pyrosm_spark.functions.audio_np import encode_pcm16
-    from pyrosm_spark.operators.multimodal import audio_features
-
-    wave = np.linspace(-0.5, 0.5, 800).reshape(-1, 2)
-    payload = encode_pcm16(wave)
-    rows = [
-        ("good", payload, 16000, 2, "pcm16", 25),
-        ("zero_rate", payload, 0, 2, "pcm16", 25),
-        ("null_rate", payload, None, 2, "pcm16", 25),
-        ("null_channels", payload, 16000, None, "pcm16", 25),
-    ]
-    audio = spark.createDataFrame(
-        rows, "audio_id string, bytes binary, sample_rate int, "
-              "n_channels int, fmt string, duration_ms int")
-    feats = {r["audio_id"]: r for r in audio_features(audio).collect()}
-    assert feats["good"]["ok"] and feats["good"]["n_samples"] == 400
-    for bad in ("zero_rate", "null_rate", "null_channels"):
-        assert feats[bad]["ok"] is False, bad
-        assert feats[bad]["err"], bad
-
-
-def test_audio_pcm16_roundtrip():
-    """encode_pcm16 -> decode_audio is lossless to int16 resolution."""
-    import numpy as np
-
-    from pyrosm_spark.functions.audio_np import decode_audio, encode_pcm16
-
-    rng = np.random.default_rng(1)
-    wave = rng.uniform(-1, 1, (1000, 2))
-    back = decode_audio(encode_pcm16(wave), "pcm16", n_channels=2)
-    assert back.shape == (1000, 2)
-    assert np.abs(back - np.clip(wave, -1, 1)).max() < 1.0 / 32767 + 1e-9
-
-
-def test_simhash_empty_docs_never_pair(spark):
-    """Token-less documents get a NULL signature and are excluded from
-    pairing — a 0 signature would pair every empty doc at hamming 0
-    (and diverge from the SQL oracle, which emits no rows for them)."""
-    df = spark.createDataFrame(
-        [("a", ""), ("b", "   "), ("c", None),
-         ("d", "common text body"), ("e", "common text body")],
-        ["doc_id", "text"])
-    pairs = D.simhash_pairs(df, max_hamming=8).collect()
-    ids = {(r["doc_a"], r["doc_b"]) for r in pairs}
-    assert ("a", "b") not in ids and ("a", "c") not in ids
-    assert ("d", "e") in ids
-
-
-def test_ngram_df_cap_excludes_hot_only_pairs(spark):
-    """De-skew: shingles with df > max_df never generate candidates —
-    a pair whose ONLY shared shingle is near-universal is dropped,
-    while pairs sharing any cold shingle keep their EXACT (uncapped)
-    Jaccard value."""
-    hot = "the quick brown"  # one 3-gram shared by every doc
-    rows = [(f"d{i:02d}", f"the quick brown unique{i} body{i} tail{i}")
-            for i in range(8)]
-    # d90/d91 share cold shingles too (near-dup pair)
-    rows += [("d90", "the quick brown shared phrase body alpha"),
-             ("d91", "the quick brown shared phrase body beta")]
-    df = spark.createDataFrame(rows, ["doc_id", "text"])
-
-    capped = D.ngram_jaccard_pairs(df, threshold=0.05, max_df=5)
-    uncapped = D.ngram_jaccard_pairs(df, threshold=0.05, max_df=None)
-    got_c = {(r["doc_a"], r["doc_b"]): r["jaccard"]
-             for r in capped.collect()}
-    got_u = {(r["doc_a"], r["doc_b"]): r["jaccard"]
-             for r in uncapped.collect()}
-    # the near-dup pair survives the cap with an identical exact value
-    assert ("d90", "d91") in got_c
-    assert got_c[("d90", "d91")] == got_u[("d90", "d91")]
-    # hot-only pairs (share just 'the quick brown') exist uncapped,
-    # never capped
-    hot_only = [p for p in got_u if p != ("d90", "d91")]
-    assert hot_only, "uncapped run should surface hot-only pairs"
-    for p in hot_only:
-        assert p not in got_c
-
-
-def test_ngram_df_cap_oracle_parity(spark):
-    """Capped engine output == capped SQL oracle on a hot-shingle
-    corpus (both sides exclude hot shingles from candidate generation
-    and recount common over full sets)."""
-    import pandas as pd
-
-    rows = [(f"d{i:02d}", f"common lead in unique{i} trail{i}")
-            for i in range(6)]
-    rows += [("d90", "common lead in shared tail body x"),
-             ("d91", "common lead in shared tail body y")]
-    pdf = pd.DataFrame(rows, columns=["doc_id", "text"])
-    con = duckdb.connect()
-    con.register("docs_t", pdf)
-    con.execute("CREATE VIEW hotdocs AS SELECT * FROM docs_t")
-    sql = D.ngram_jaccard_sql("hotdocs", threshold=0.05, max_df=4)
-    exp = {(r[0], r[1]): r[2] for r in con.execute(sql).fetchall()}
-    df = spark.createDataFrame(rows, ["doc_id", "text"])
-    got = {(r["doc_a"], r["doc_b"]): r["jaccard"] for r in
-           D.ngram_jaccard_pairs(df, threshold=0.05, max_df=4).collect()}
-    assert got == exp
-
-
 def test_lsh_cosine_pairs_vs_oracle(spark, emb, duck):
     got = S.lsh_cosine_pairs(emb, threshold=0.3)
     rows, cols = run_oracle(duck, S.lsh_cosine_pairs_sql("embeddings", 0.3))
     compare(got, rows, cols)
-
-
-def test_lsh_cosine_pairs_subset_of_exact(spark, emb):
-    """Every LSH-bucketed pair is a true pair (exact cosine refine):
-    the candidate stage only affects RECALL, never precision."""
-    lsh = {(r["vec_a"], r["vec_b"]): r["cosine"]
-           for r in S.lsh_cosine_pairs(emb, threshold=0.3).collect()}
-    exact = {(r["id_a"], r["id_b"]): r["cosine"]
-             for r in D.embedding_cosine_pairs(emb, threshold=0.3).collect()}
-    assert set(lsh) <= set(exact)
-    for k, v in lsh.items():
-        assert v == exact[k]
-
-
-def test_oracle_gate_detects_value_and_row_divergence(spark, docs, duck):
-    """Sensitivity check on the correctness harness itself: a
-    deliberately perturbed engine result must FAIL the oracle compare
-    (guards against vacuously-green oracles)."""
-    good = D.exact_dedup(docs)
-    rows, cols = run_oracle(duck, D.exact_dedup_sql("documents"))
-    compare(good, rows, cols)  # baseline sanity
-
-    # value perturbation: flip one boolean column
-    bad_vals = good.withColumn(
-        "is_duplicate",
-        F.when(F.col("doc_id") == "0", ~F.col("is_duplicate"))
-        .otherwise(F.col("is_duplicate")))
-    with pytest.raises(AssertionError):
-        compare(bad_vals, rows, cols)
-
-    # row perturbation: drop one row
-    bad_rows = good.filter(F.col("doc_id") != "0")
-    with pytest.raises(AssertionError):
-        compare(bad_rows, rows, cols)
-
-    # schema perturbation: renamed column
-    bad_schema = good.withColumnRenamed("canonical_id", "canon")
-    with pytest.raises(AssertionError):
-        compare(bad_schema, rows, cols)
-
-
-def test_near_dup_clusters_vs_oracle(spark, docs, duck):
-    from pyrosm_spark.operators.dedup import (
-        minhash_lsh_pairs,
-        near_dup_clusters,
-        near_dup_clusters_sql,
-    )
-
-    got = near_dup_clusters(minhash_lsh_pairs(docs), docs=docs)
-    rows, cols = run_oracle(duck, near_dup_clusters_sql("documents"))
-    compare(got, rows, cols)
-    # cluster invariants: canonical ids are cluster minima and
-    # themselves non-duplicates
-    data = {r["doc_id"]: (r["canonical_id"], r["is_duplicate"])
-            for r in got.collect()}
-    for doc, (canon, is_dup) in data.items():
-        assert canon <= doc
-        assert data[canon][0] == canon and not data[canon][1]
-
-
-def test_embedding_cosine_pairs_size_gate(spark, emb):
-    """The exact all-pairs join is an oracle anchor: above max_rows it
-    refuses and points at the LSH scale path; max_rows=None forces."""
-    with pytest.raises(ValueError, match="lsh_cosine_pairs"):
-        D.embedding_cosine_pairs(emb, max_rows=10).count()
-    # explicit bypass still works
-    assert D.embedding_cosine_pairs(
-        emb.limit(30), threshold=0.0, max_rows=None).count() > 0
 
 
 def test_ivf_sample_hash_mirrors_numpy(spark, emb):
@@ -685,184 +254,6 @@ def test_ann_ivfpq_deterministic_and_bounded(spark, emb):
         assert -1.5 <= r["cosine"] <= 1.5
 
 
-# --------------------------------------------------------------------------
-# Round-3 dedup review fixes
-# --------------------------------------------------------------------------
-
-def test_empty_doc_shingle_oracle_parity(spark):
-    """Token-less docs must produce NO shingles on BOTH engines: the
-    SQL mirror previously gave them a '' shingle, pairing every empty
-    doc at jaccard 1.0 while the Spark path emitted nothing."""
-    import pandas as pd
-
-    rows = [("a", ""), ("b", "   "), ("c", "shared body of text here"),
-            ("d", "shared body of text here")]
-    pdf = pd.DataFrame(rows, columns=["doc_id", "text"])
-    con = duckdb.connect()
-    con.register("docs_t", pdf)
-    con.execute("CREATE VIEW edocs AS SELECT * FROM docs_t")
-    exp = {(r[0], r[1]): r[2] for r in con.execute(
-        D.ngram_jaccard_sql("edocs", threshold=0.2)).fetchall()}
-    df = spark.createDataFrame(rows, ["doc_id", "text"])
-    got = {(r["doc_a"], r["doc_b"]): r["jaccard"] for r in
-           D.ngram_jaccard_pairs(df, threshold=0.2).collect()}
-    assert got == exp
-    assert ("a", "b") not in got and ("c", "d") in got
-    # minhash signatures: empty docs absent from both sides
-    sig_rows = D.minhash_signatures(df).select("doc").collect()
-    exp_sig = con.execute(D.minhash_signature_sql("edocs")).fetchall()
-    assert {r["doc"] for r in sig_rows} == {r[0] for r in exp_sig} == \
-        {"c", "d"}
-
-
-def test_zero_norm_embedding_never_pairs(spark):
-    """A zero vector's cosine is 0/0 = NaN, and Spark orders NaN above
-    every double — without the norm guard it pairs with everything."""
-    import pandas as pd
-
-    rows = [(1, [0.0] * 4), (2, [1.0, 0.0, 0.0, 0.0]),
-            (3, [1.0, 0.001, 0.0, 0.0]), (4, [0.0] * 4)]
-    df = spark.createDataFrame(
-        [(i, v) for i, v in rows], "vec_id long, embedding array<double>")
-    exact = D.embedding_cosine_pairs(df, threshold=0.9).collect()
-    ids = {(r["id_a"], r["id_b"]) for r in exact}
-    assert ids == {(2, 3)}
-    lsh = S.lsh_cosine_pairs(df, threshold=0.9, dim=4).collect()
-    assert {(r["vec_a"], r["vec_b"]) for r in lsh} <= {(2, 3)}
-    # oracle parity on the same frame
-    pdf = pd.DataFrame({"vec_id": [r[0] for r in rows],
-                        "embedding": [r[1] for r in rows]})
-    con = duckdb.connect()
-    con.register("emb_t", pdf)
-    con.execute("CREATE VIEW zemb AS SELECT * FROM emb_t")
-    exp = {(r[0], r[1]) for r in con.execute(
-        D.embedding_cosine_sql("zemb", 0.9)).fetchall()}
-    assert exp == ids
-
-
-def test_simhash_tokenizer_ascii_whitespace_parity(spark):
-    """simhash64 must tokenize with ASCII-\\s+ exactly like
-    tokens_col/tokens_sql — Python's bare str.split() also splits on
-    Unicode whitespace (U+00A0 etc) and diverges on scraped web text."""
-    import pandas as pd
-
-    nbsp = "alpha\u00a0beta gamma delta"
-    rows = [("a", nbsp), ("b", nbsp),
-            ("c", "alpha beta gamma delta"), ("d", "alpha beta gamma delta")]
-    pdf = pd.DataFrame(rows, columns=["doc_id", "text"])
-    con = duckdb.connect()
-    con.register("docs_t", pdf)
-    con.execute("CREATE VIEW wdocs AS SELECT * FROM docs_t")
-    exp = {(r[0], r[1], r[2]) for r in con.execute(
-        D.simhash_pairs_sql("wdocs", max_hamming=8)).fetchall()}
-    df = spark.createDataFrame(rows, ["doc_id", "text"])
-    got = {(r["doc_a"], r["doc_b"], r["hamming"]) for r in
-           D.simhash_pairs(df, max_hamming=8).collect()}
-    assert got == exp
-    assert ("a", "b", 0) in got and ("c", "d", 0) in got
-
-
-def test_phash_grouped_duplicate_ids_match_join(spark):
-    """Duplicate image_id rows must never self-pair: the grouped
-    strategy previously emitted (X, X) rows the join strategy and the
-    SQL oracle exclude via strict a.id < b.id."""
-    rows = [("x", 0b1010), ("x", 0b1010), ("y", 0b1011), ("z", 1 << 40)]
-    df = spark.createDataFrame(rows, "image_id string, phash long")
-    grouped = {(r["img_a"], r["img_b"], r["hamming"]) for r in
-               D.phash_pairs(df, max_hamming=2,
-                             strategy="grouped").collect()}
-    joined = {(r["img_a"], r["img_b"], r["hamming"]) for r in
-              D.phash_pairs(df, max_hamming=2, strategy="join").collect()}
-    assert grouped == joined
-    assert all(a != b for a, b, _ in grouped)
-    # duplicate ids still pair with OTHER images (both copies collapse
-    # onto the same ordered pair)
-    assert ("x", "y", 1) in grouped
-
-
-def test_phash_null_phash_tolerated(spark):
-    """NULL phash rows (public API accepts arbitrary frames) must not
-    crash the grouped Arrow kernels — both strategies drop them."""
-    rows = [("a", 7), ("b", 7), ("c", None)]
-    df = spark.createDataFrame(rows, "image_id string, phash long")
-    for strategy in ("grouped", "join"):
-        got = {(r["img_a"], r["img_b"]) for r in
-               D.phash_pairs(df, max_hamming=1, strategy=strategy).collect()}
-        assert got == {("a", "b")}, strategy
-
-
-def test_join_hot_threshold_engages_without_n_blocks(spark, synth_dir):
-    """phash_pairs(strategy='join') with default n_blocks=1 must still
-    apply hot-bucket chunk blocking — and the blocked pair set is
-    identical to the unblocked one."""
-    path = os.path.join(synth_dir, "images.parquet")
-    imgs = spark.read.parquet(path).limit(120)
-    blocked = D.phash_pairs(imgs, max_hamming=4, strategy="join",
-                            n_blocks=1, hot_threshold=10)
-    plain = D.phash_pairs(imgs, max_hamming=4, strategy="join",
-                          n_blocks=1, hot_threshold=None)
-    got_b = {(r["img_a"], r["img_b"], r["hamming"])
-             for r in blocked.collect()}
-    got_p = {(r["img_a"], r["img_b"], r["hamming"])
-             for r in plain.collect()}
-    assert got_b == got_p and got_b
-
-
-def test_decode_features_sample_ratio_validated(spark):
-    """sample_ratio=0 would divide by zero deriving the hash modulus;
-    negative ratios would silently keep every row — both rejected."""
-    import pyrosm_spark.operators.multimodal as M
-
-    df = spark.createDataFrame([("a", None, "png", 0, "")],
-                               "image_id string, bytes binary, fmt string,"
-                               " phash long, caption string")
-    for bad in (0.0, -0.5, 1.5):
-        with pytest.raises(ValueError, match="sample_ratio"):
-            M.decode_features(df, sample_ratio=bad)
-
-
-def test_exact_dedup_null_text_singletons(spark):
-    """NULL-text poison rows (failed fetch/decode) must each be their
-    OWN cluster — md5(NULL) is NULL and a naive window would collapse
-    1000 unrelated broken rows into one duplicate group and drop 999."""
-    rows = [(1, "same"), (2, "same"), (3, None), (4, None), (5, None)]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {r["doc_id"]: r for r in D.exact_dedup(df).collect()}
-    assert got[2]["is_duplicate"] and got[2]["canonical_id"] == 1
-    for i in (3, 4, 5):
-        assert not got[i]["is_duplicate"], i
-        assert got[i]["canonical_id"] == i
-        assert got[i]["content_hash"] is None
-    # and the SQL oracle mirrors the rule exactly
-    import duckdb
-
-    con = duckdb.connect()
-    con.execute("CREATE TABLE documents AS SELECT * FROM (VALUES "
-                "(1, 'same'), (2, 'same'), (3, NULL), (4, NULL), "
-                "(5, NULL)) t(doc_id, text)")
-    orc = {r[0]: r for r in con.execute(
-        D.exact_dedup_sql("documents")).fetchall()}
-    for i in (1, 2, 3, 4, 5):
-        assert orc[i][2] == got[i]["canonical_id"], i
-        assert orc[i][3] == got[i]["is_duplicate"], i
-
-
-def test_simhash_long_document_bounded_memory(spark):
-    """A repeated-token mega-document must hash identically to its
-    deduplicated token multiset (the unique+counts accumulation) and
-    not scale memory with token OCCURRENCES."""
-    base = "alpha beta gamma delta epsilon"
-    mega = " ".join([base] * 200_000)  # 1M tokens, 5 unique
-    df = spark.createDataFrame(
-        [(1, mega), (2, base)], "doc_id long, text string")
-    out = {r["doc_id"]: r["sim"] for r in df.select(
-        "doc_id", D.simhash64(F.col("text")).alias("sim")).collect()}
-    # sign(200k * acc) == sign(acc): the repeated doc hashes equal to
-    # one copy when every per-bit accumulator is nonzero (5 odd terms
-    # of +-1 can never sum to 0)
-    assert out[1] == out[2]
-
-
 def test_topk_zero_norm_vectors_excluded(spark):
     """A zero embedding has NaN cosine with everything, and Spark ranks
     NaN ABOVE every double — one all-zero corpus row would displace a
@@ -885,6 +276,154 @@ def test_topk_zero_norm_vectors_excluded(spark):
     assert all(r["neighbor_id"] != 3 and r["query_id"] != 3 for r in ivf)
 
 
+def test_embedding_cosine_vs_oracle(spark, emb, duck):
+    got = S.embedding_cosine_pairs(emb, threshold=0.9)
+    rows, cols = run_oracle(duck, S.embedding_cosine_sql("embeddings", 0.9))
+    compare(got, rows, cols)
+
+
+def test_lsh_cosine_pairs_subset_of_exact(spark, emb):
+    """Every LSH-bucketed pair is a true pair (exact cosine refine):
+    the candidate stage only affects RECALL, never precision."""
+    lsh = {(r["vec_a"], r["vec_b"]): r["cosine"]
+           for r in S.lsh_cosine_pairs(emb, threshold=0.3).collect()}
+    exact = {(r["id_a"], r["id_b"]): r["cosine"]
+             for r in S.embedding_cosine_pairs(emb, threshold=0.3).collect()}
+    assert set(lsh) <= set(exact)
+    for k, v in lsh.items():
+        assert v == exact[k]
+
+
+def test_embedding_cosine_pairs_size_gate(spark, emb):
+    """The exact all-pairs join is an oracle anchor: above max_rows it
+    refuses and points at the LSH scale path; max_rows=None forces."""
+    with pytest.raises(ValueError, match="lsh_cosine_pairs"):
+        S.embedding_cosine_pairs(emb, max_rows=10).count()
+    # explicit bypass still works
+    assert S.embedding_cosine_pairs(
+        emb.limit(30), threshold=0.0, max_rows=None).count() > 0
+
+
+def test_zero_norm_embedding_never_pairs(spark):
+    """A zero vector's cosine is 0/0 = NaN, and Spark orders NaN above
+    every double — without the norm guard it pairs with everything."""
+    import pandas as pd
+
+    rows = [(1, [0.0] * 4), (2, [1.0, 0.0, 0.0, 0.0]),
+            (3, [1.0, 0.001, 0.0, 0.0]), (4, [0.0] * 4)]
+    df = spark.createDataFrame(
+        [(i, v) for i, v in rows], "vec_id long, embedding array<double>")
+    exact = S.embedding_cosine_pairs(df, threshold=0.9).collect()
+    ids = {(r["id_a"], r["id_b"]) for r in exact}
+    assert ids == {(2, 3)}
+    lsh = S.lsh_cosine_pairs(df, threshold=0.9, dim=4).collect()
+    assert {(r["vec_a"], r["vec_b"]) for r in lsh} <= {(2, 3)}
+    # oracle parity on the same frame
+    pdf = pd.DataFrame({"vec_id": [r[0] for r in rows],
+                        "embedding": [r[1] for r in rows]})
+    con = duckdb.connect()
+    con.register("emb_t", pdf)
+    con.execute("CREATE VIEW zemb AS SELECT * FROM emb_t")
+    exp = {(r[0], r[1]) for r in con.execute(
+        S.embedding_cosine_sql("zemb", 0.9)).fetchall()}
+    assert exp == ids
+
+
+def test_oracle_gate_detects_value_and_row_divergence(spark, emb, duck):
+    """Sensitivity check on the compare itself: a deliberately
+    perturbed engine result must FAIL the oracle compare (guards
+    against vacuously-green oracles)."""
+    good = S.cosine_topk(emb.filter(F.col("vec_id") < 20), emb, k=5)
+    rows, cols = run_oracle(
+        duck, S.cosine_topk_sql("embeddings", 5, "q.vec_id < 20"))
+    compare(good, rows, cols)  # baseline sanity
+
+    # value perturbation: shift one cosine
+    bad_vals = good.withColumn(
+        "cosine",
+        F.when((F.col("query_id") == 0) & (F.col("rank") == 1),
+               F.col("cosine") + 0.01)
+        .otherwise(F.col("cosine")))
+    with pytest.raises(AssertionError):
+        compare(bad_vals, rows, cols)
+
+    # row perturbation: drop one row
+    bad_rows = good.filter((F.col("query_id") != 0) | (F.col("rank") != 1))
+    with pytest.raises(AssertionError):
+        compare(bad_rows, rows, cols)
+
+    # schema perturbation: renamed column
+    bad_schema = good.withColumnRenamed("neighbor_id", "neighbour_id")
+    with pytest.raises(AssertionError):
+        compare(bad_schema, rows, cols)
+
+
+def test_interleaved_same_op_released_pin_recomputes(spark, emb):
+    """Pin-lifecycle contract under two interleaved pipelines of the
+    SAME operator in one session: the second call releases the first
+    call's pinned bucket frame (per-tag lifecycle, spatial_join._pin),
+    so a still-unevaluated plan returned by the first call loses its
+    cache — and must RECOMPUTE from deterministic lineage, not fail or
+    change results."""
+    from pyrosm_spark.operators import spatial_join as SJ
+    SJ.release_pinned_caches()
+    first = S.lsh_cosine_pairs(emb, threshold=0.3)   # pins buckets #1
+    first_pins = list(SJ._PINNED.get("emb_lsh_buckets") or [])
+    assert first_pins
+    second = S.lsh_cosine_pairs(emb, threshold=0.3)  # releases #1
+    now = SJ._PINNED.get("emb_lsh_buckets") or []
+    assert now and all(f is not g for f in first_pins for g in now), \
+        "second call must have released the first call's pin"
+    # the first plan still evaluates — recomputed, identical pair set
+    a = {(r["vec_a"], r["vec_b"]) for r in first.collect()}
+    b = {(r["vec_a"], r["vec_b"]) for r in second.collect()}
+    assert a == b and len(a) > 0
+    SJ.release_pinned_caches()
+
+
+def test_decode_features_invariants(spark, synth_dir):
+    images = spark.read.parquet(os.path.join(synth_dir, "images.parquet"))
+    feats = M.decode_features(images)
+    rows = feats.collect()
+    assert len(rows) == images.filter(F.col("bytes").isNotNull()).count()
+    assert all(r["ok"] for r in rows)
+    assert all(r["phash_match"] for r in rows)
+
+
+def test_decode_features_sample_ratio_validated(spark):
+    """sample_ratio=0 would divide by zero deriving the hash modulus;
+    negative ratios would silently keep every row — both rejected."""
+    import pyrosm_spark.operators.multimodal as M
+
+    df = spark.createDataFrame([("a", None, "png", 0, "")],
+                               "image_id string, bytes binary, fmt string,"
+                               " phash long, caption string")
+    for bad in (0.0, -0.5, 1.5):
+        with pytest.raises(ValueError, match="sample_ratio"):
+            M.decode_features(df, sample_ratio=bad)
+
+
+def test_media_null_payloads_degrade_per_row(spark):
+    """A NULL payload row is skipped and a NULL or corrupt format row
+    becomes an err record: a poison row must never kill a decode job
+    mid-stage."""
+    from pyrosm_spark.functions import image_np as I
+
+    good = bytearray(I.encode_png(I.synth_pixels(1, 8, 8)))
+    df = spark.createDataFrame(
+        [("ok", good, "png", 0, "c"),
+         ("null_bytes", None, "png", 0, "c"),
+         ("null_fmt", good, None, 0, None),
+         ("junk", bytearray(b"not an image"), "png", 0, "c")],
+        "image_id string, bytes binary, fmt string, phash long, "
+        "caption string")
+    out = {r["image_id"]: r for r in M.decode_features(df).collect()}
+    assert set(out) == {"ok", "null_fmt", "junk"}
+    assert out["ok"]["ok"] and (out["ok"]["h"], out["ok"]["w"]) == (8, 8)
+    for bad in ("null_fmt", "junk"):
+        assert not out[bad]["ok"] and out[bad]["err"]
+
+
 def test_scc_auto_dispatch_string_ids(spark):
     """scc_components' Tarjan arm must handle string node ids exactly
     like the distributed arm (the dispatch is documented as invisible
@@ -904,26 +443,3 @@ def test_scc_auto_dispatch_string_ids(spark):
     assert tarjan["a"] == tarjan["b"] == tarjan["c"] == "a"
     assert tarjan["d"] == "d" and tarjan["e"] == "e"
 
-
-def test_lsh_joins_ride_pinned_layout_no_ensure_exchanges(spark, docs):
-    """The r5 exchange-elision contract (mirrors plan_audit §9): the
-    eagerly materialized pins partitioned on the downstream join keys
-    must be RECOGNIZED by planning. The unblocked banded self-join
-    (simhash) plans with zero EnsureRequirements exchanges; the
-    constant-blocked one (minhash) with exactly one — the replicated
-    build side, which must shuffle to spread a bucket's pair-space.
-    A regression (lazy pin, layout-free pin, or a Spark upgrade that
-    stops propagating cached partitioning) re-adds corpus x bands
-    shuffles silently — this locks the plan shape in the main gate."""
-    from pyrosm_spark.operators import spatial_join as SJ
-
-    def ensure_exchanges(df):
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        return [ln for ln in plan.splitlines()
-                if "Exchange" in ln and "ENSURE_REQUIREMENTS" in ln]
-
-    SJ.release_pinned_caches()
-    assert ensure_exchanges(D.simhash_pairs(docs, max_hamming=8)) == []
-    SJ.release_pinned_caches()
-    assert len(ensure_exchanges(D.minhash_lsh_pairs(docs, n_blocks=4))) == 1
-    SJ.release_pinned_caches()

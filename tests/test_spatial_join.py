@@ -853,3 +853,51 @@ def test_raster_cover_memo_reuse(spark, images, buildings):
     assert raster_polygon_join(tiles14, buildings, res=14).count() == n1
     assert SJ._PINNED.get("raster_cover") is first
     SJ.release_pinned_caches()
+
+
+def test_composed_left_joins_keep_separate_pins(spark, images, buildings):
+    """Composing a how='left' PIP join and a how='left' raster join into
+    one lazy plan must not unpin the first join's matched frame: pin
+    tags are namespaced per operator, so the second build cannot
+    release the first's materialization before the action runs."""
+    from pyrosm_spark.operators import spatial_join as SJ
+    from pyrosm_spark.operators.spatial_join import raster_polygon_join
+
+    SJ.release_pinned_caches()
+    pip = point_in_polygon_join(images, buildings, res=15, how="left",
+                                point_id_col="image_id")
+    tiles_df = (assign_tiles(images, 12)
+                .groupBy("cell").agg(F.count("*").alias("n_images")))
+    raster = raster_polygon_join(tiles_df, buildings, res=12, how="left")
+    assert SJ._PINNED.get("pip_left"), \
+        "PIP matched frame unpinned by the raster build"
+    assert SJ._PINNED.get("raster_left")
+    both = (pip.select("poly_id").unionByName(raster.select("poly_id"))
+            .distinct())
+    assert both.count() > 0
+    assert SJ._PINNED.get("pip_left") and SJ._PINNED.get("raster_left")
+    SJ.release_pinned_caches()
+
+
+def test_interleaved_same_op_released_pin_recomputes(spark, images,
+                                                     buildings):
+    """A second call of the same how='left' operator releases the first
+    call's pinned matched frame (per-tag lifecycle, spatial_join._pin).
+    A plan the first call returned then loses its cache and must
+    recompute from its deterministic lineage: same rows, no failure."""
+    from pyrosm_spark.operators import spatial_join as SJ
+
+    SJ.release_pinned_caches()
+    first = point_in_polygon_join(images, buildings, res=15, how="left",
+                                  point_id_col="image_id")
+    first_pins = list(SJ._PINNED.get("pip_left") or [])
+    assert first_pins
+    second = point_in_polygon_join(images, buildings, res=15, how="left",
+                                   point_id_col="image_id")
+    now = SJ._PINNED.get("pip_left") or []
+    assert now and all(f is not g for f in first_pins for g in now), \
+        "second call must have released the first call's pin"
+    a = {(r["image_id"], r["poly_id"]) for r in first.collect()}
+    b = {(r["image_id"], r["poly_id"]) for r in second.collect()}
+    assert a == b and len(a) > 0
+    SJ.release_pinned_caches()

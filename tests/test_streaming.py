@@ -6,29 +6,10 @@ import pytest
 from pyspark.sql import functions as F
 
 from pyrosm_spark.streaming.ingest import (
-    read_events_stream,
     read_images_stream,
     run_to_memory,
     streaming_tile_assignment,
-    windowed_event_counts,
 )
-
-SF_DIR = "/root/testdata/sf0.001"
-
-
-def test_windowed_counts_stream_matches_batch(spark):
-    ev_stream = read_events_stream(spark, os.path.join(SF_DIR,
-                                                       "events.parquet"))
-    agg = windowed_event_counts(ev_stream)
-    run_to_memory(agg, "win_counts", output_mode="complete")
-    got = {(r["win_start"], r["event_type"]): (r["n"], r["v"])
-           for r in spark.sql("SELECT * FROM win_counts").collect()}
-
-    batch = spark.read.parquet(os.path.join(SF_DIR, "events.parquet"))
-    exp_df = windowed_event_counts(batch)
-    exp = {(r["win_start"], r["event_type"]): (r["n"], r["v"])
-           for r in exp_df.collect()}
-    assert got == exp and len(got) > 10
 
 
 def test_streaming_tile_assignment_matches_batch(spark, synth_dir):
@@ -82,63 +63,6 @@ def test_stateful_cell_counts_matches_batch(spark, synth_dir):
     )
     exp = {r["cell"]: (r["n"], r["b"]) for r in batch.collect()}
     assert final == exp and len(exp) > 10
-
-
-def test_streaming_exact_dedup_first_arrival(spark, synth_dir):
-    """Streaming content dedup: per content key exactly one survivor;
-    survivor count equals the batch distinct-key count."""
-    import os
-
-    from pyrosm_spark.streaming.ingest import (
-        read_images_stream, run_to_memory, streaming_exact_dedup)
-
-    path = os.path.join(synth_dir, "images.parquet")
-    stream = read_images_stream(spark, path, max_files_per_trigger=1)
-    run_to_memory(streaming_exact_dedup(stream), "dedup_stream",
-                  output_mode="append")
-    got = spark.sql("SELECT * FROM dedup_stream")
-    batch = spark.read.parquet(path)
-    # oracle mirrors the operator's key ladder (null-safe phash/w/h
-    # parts; md5(bytes) / id / uuid fallbacks for NULL phash)
-    n_keys = (batch.selectExpr(
-        "CASE WHEN phash IS NOT NULL THEN concat_ws(':', 'p', "
-        "  coalesce(cast(phash AS string), '\\0'), "
-        "  coalesce(cast(w AS string), '\\0'), "
-        "  coalesce(cast(h AS string), '\\0')) "
-        "WHEN bytes IS NOT NULL THEN concat('b:', md5(bytes)) "
-        "WHEN image_id IS NOT NULL THEN concat('id:', image_id) "
-        "ELSE concat('u:', uuid()) END AS k")
-        .distinct().count())
-    assert got.count() == n_keys
-    assert got.select("content_key").distinct().count() == n_keys
-
-
-def test_streaming_dedup_key_ladder_null_safety(spark, tmp_path):
-    """NULL w/h must not collide distinct keys (concat_ws drops NULLs);
-    rows with nothing known must never dedupe against each other."""
-    import pandas as pd
-
-    from pyrosm_spark.streaming.ingest import streaming_exact_dedup
-
-    rows = [
-        ("a", b"x1", None, 640, 5, 0.0, 0.0),   # phash 5, w NULL
-        ("b", b"x2", 640, None, 5, 0.0, 0.0),   # phash 5, h NULL
-        ("c", b"x3", 640, None, 5, 0.0, 0.0),   # true dup of b
-        ("d", b"same", None, None, None, 0.0, 0.0),  # unknown, by bytes
-        ("e", b"same", None, None, None, 0.0, 0.0),  # dup of d by bytes
-        ("f", b"diff", None, None, None, 0.0, 0.0),  # distinct bytes
-        (None, None, None, None, None, 0.0, 0.0),    # nothing known
-        (None, None, None, None, None, 0.0, 0.0),    # nothing known
-    ]
-    pdf = pd.DataFrame(rows, columns=[
-        "image_id", "bytes", "w", "h", "phash", "lon", "lat"])
-    df = spark.createDataFrame(pdf).withColumn(
-        "fmt", F.lit("png")).withColumn("caption", F.lit(""))
-    out = streaming_exact_dedup(df).collect()
-    ids = sorted(str(r["image_id"]) for r in out)
-    # a vs b: different null slots -> both kept; c dedupes into b;
-    # d/e collapse on bytes; f kept; both all-NULL rows kept (uuid)
-    assert ids == ["None", "None", "a", "b", "d", "f"]
 
 
 def test_streaming_pip_equals_batch(spark, synth_dir, tmp_path_factory):
