@@ -13,8 +13,6 @@ A from-scratch rebuild of the query capabilities of pyrosm/pyrosm
   (``functions.tiles``, ``operators.spatial_join``)
 * image-payload plumbing (decode / phash / PSNR) as Arrow-batched pandas
   UDFs (``functions.image_np``, ``operators.multimodal``)
-* embedding similarity search: exact cosine top-k, LSH / IVF / IVF-PQ
-  ANN (``operators.similarity``)
 * checkpoint / lineage manifests for resumable multi-stage jobs
   (``plans.checkpoint``)
 

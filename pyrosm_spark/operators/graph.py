@@ -451,7 +451,11 @@ def connected_components(edges: DataFrame, u_col: str = "u",
     the engine — the planetary-scale guard. All data-side work is
     plain joins/groupBys.
     """
-    from pyrosm_spark.operators.spatial_join import _pin_fresh, _release_pins
+    from pyrosm_spark.operators.spatial_join import (
+        _pin,
+        _pin_fresh,
+        _release_pins,
+    )
 
     nshuf = int(edges.sparkSession.conf.get(
         "spark.sql.shuffle.partitions", "32"))
@@ -473,11 +477,12 @@ def connected_components(edges: DataFrame, u_col: str = "u",
     # labels.join(mapping) still reads when contraction_rounds == 0
     # leaves labels un-checkpointed. A new top-level call releases
     # every level of the previous call's recursion.
+    tag = f"cc_und_{_depth}"
     if _depth == 0:
         for d in range(1, _MAX_DEPTH + 1):
             _release_pins(f"cc_und_{d}")
     und = _pin_fresh(
-        f"cc_und_{_depth}",
+        tag,
         edges.select(F.col(u_col).alias("a"), F.col(v_col).alias("b"))
         .unionAll(edges.select(F.col(v_col).alias("a"),
                                F.col(u_col).alias("b")))
@@ -507,21 +512,23 @@ def connected_components(edges: DataFrame, u_col: str = "u",
             .localCheckpoint()
         )
 
-    # contract: surviving cross-label edges form the super-graph
+    # contract: surviving cross-label edges form the super-graph,
+    # pinned beside und (the count and the collect below read it) so
+    # release_pinned_caches() frees it with the call's pins
     lab_a = labels.select(F.col("node").alias("a"), F.col("comp").alias("ca"))
     lab_b = labels.select(F.col("node").alias("b"), F.col("comp").alias("cb"))
-    sup = (
-        und.join(lab_a, "a").join(lab_b, "b")
-        .filter(F.col("ca") != F.col("cb"))
-        .select("ca", "cb").distinct().localCheckpoint()
-    )
+    sup = _pin(tag, und.join(lab_a, "a").join(lab_b, "b")
+               .filter(F.col("ca") != F.col("cb"))
+               .select("ca", "cb").distinct())
     n_sup = sup.count()
     if _depth < _MAX_DEPTH and n_sup > max_driver_edges:
         # still too big for the driver: recurse on the super-graph
-        # (labels are nodes), then broadcast the label -> root map back
+        # (labels are nodes), then broadcast the label -> root map back.
+        # The recursion reads a checkpoint of it: each level's plan
+        # would otherwise nest every level above it.
         sub = connected_components(
-            sup, "ca", "cb", contraction_rounds, max_driver_edges,
-            _depth + 1)
+            sup.localCheckpoint(), "ca", "cb", contraction_rounds,
+            max_driver_edges, _depth + 1)
         mapping = (sub.withColumnRenamed("comp", "root")
                    .withColumnRenamed("node", "comp"))
         return (

@@ -164,25 +164,6 @@ def main():
                   "" if path[-1].startswith("BroadcastHashJoin")
                   else f"{path[1:]}")
 
-    # 7. embedding LSH: the pinned (vid, bucket) frame is partitioned on
-    # the bucket key, so the bucket self-join must be RECOGNIZED as
-    # co-partitioned — EnsureRequirements re-adding an exchange on it
-    # means the layout regressed to decoration (REPARTITION_BY_* lines
-    # are the deliberate layout write, not violations). Broadcast is
-    # off, as for a real corpus: at this size AQE would otherwise
-    # broadcast one side and hide a missing layout.
-    from pyrosm_spark.operators.similarity import lsh_cosine_pairs
-    emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
-    spark.conf.set(key, "-1")
-    try:
-        p = plan_of(lsh_cosine_pairs(emb, threshold=0.35))
-    finally:
-        spark.conf.set(key, default_threshold)
-    ensure = [ln for ln in p.splitlines() if "Exchange" in ln
-              and "ENSURE_REQUIREMENTS" in ln and "bucket" in ln]
-    check("embedding LSH: bucket self-join exchange-free",
-          len(ensure) == 0, f"(found {len(ensure)})")
-
     world.close()
     shutil.rmtree(world.scratch, ignore_errors=True)
     print(f"\n{'ALL OK' if not FAILS else f'{len(FAILS)} FAILURES: {FAILS}'}")

@@ -15,6 +15,10 @@ SYNTH_DIR = os.path.join(
 
 @pytest.fixture(scope="session")
 def spark():
+    # One local JVM runs the driver and the executors; the suite fits in
+    # 4 GB, so a run leaves room for a second Spark process on the host.
+    # An explicit SPARK_DRIVER_MEM still wins.
+    os.environ.setdefault("SPARK_DRIVER_MEM", "4g")
     s = get_spark("pyrosm_spark_tests", master="local[4]", shuffle_partitions=8)
     yield s
 

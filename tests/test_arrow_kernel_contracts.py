@@ -168,70 +168,3 @@ def test_wkb_segment_sets_polygon_and_multipolygon():
     assert len(out[3]) == 2 and len(out[3][0]) == 4 and len(out[3][1]) == 4
     assert len(wkb_segment_sets.func(pd.Series([], dtype=object))) == 0
 
-
-# -- similarity closure factories ---------------------------------------------
-
-def test_pq_encode_and_lut_invariants():
-    from pyrosm_spark.operators.similarity import (
-        make_pq_encode_udf, make_pq_lut_udf)
-
-    rng = np.random.RandomState(7)
-    m, kc, dsub = 2, 4, 3          # dim = 6
-    books = rng.uniform(-1, 1, (m, kc, dsub))
-    encode = make_pq_encode_udf(books).func
-    lut = make_pq_lut_udf(books).func
-
-    vecs = [rng.uniform(-1, 1, m * dsub) for _ in range(5)]
-    codes = encode(pd.Series(vecs, dtype=object))
-    luts = lut(pd.Series(vecs, dtype=object))
-    for v, code, table in zip(vecs, codes, luts):
-        assert len(code) == m and len(table) == m * kc
-        for j in range(m):
-            sub = v[j * dsub:(j + 1) * dsub]
-            d = ((books[j] - sub) ** 2).sum(axis=1)
-            assert code[j] == int(d.argmin())          # nearest centroid
-            np.testing.assert_allclose(                 # ADC dot table
-                table[j * kc:(j + 1) * kc], books[j] @ sub)
-        # ADC identity: sum of LUT entries at the codes == <q, decode(c)>
-        adc = sum(table[j * kc + code[j]] for j in range(m))
-        recon = np.concatenate([books[j][code[j]] for j in range(m)])
-        np.testing.assert_allclose(adc, float(v @ recon))
-    assert len(encode(pd.Series([], dtype=object))) == 0
-    assert len(lut(pd.Series([], dtype=object))) == 0
-
-
-def test_lsh_bucket_codes_encode_table_and_signs():
-    from pyrosm_spark.operators.similarity import (
-        N_PLANES, _planes, make_bucket_udf)
-
-    dim, n_planes, n_tables = 8, 6, 3
-    bucket = make_bucket_udf(dim, n_planes, n_tables).func
-    rng = np.random.RandomState(11)
-    vecs = [rng.uniform(-1, 1, dim) for _ in range(4)]
-    out = bucket(pd.Series(vecs, dtype=object))
-    weights = (1 << np.arange(n_planes))[::-1]
-    for v, codes in zip(vecs, out):
-        assert len(codes) == n_tables
-        for t, code in enumerate(codes):
-            assert code >> n_planes == t              # table id in high bits
-            signs = (_planes(dim, n_planes, t) @ v) > 0
-            assert (code & ((1 << n_planes) - 1)) == int((signs * weights).sum())
-    assert len(bucket(pd.Series([], dtype=object))) == 0
-    # determinism: same vector, fresh factory, same codes
-    again = make_bucket_udf(dim, n_planes, n_tables).func(
-        pd.Series([vecs[0]], dtype=object))
-    assert list(again[0]) == list(out[0])
-
-
-def test_ivf_assign_nprobe_and_empty_batch():
-    from pyrosm_spark.operators.similarity import make_ivf_assign_udf
-
-    rng = np.random.RandomState(3)
-    cent = rng.uniform(-1, 1, (5, 4))
-    assign = make_ivf_assign_udf(cent, nprobe=2).func
-    vecs = [rng.uniform(-1, 1, 4) for _ in range(6)]
-    out = assign(pd.Series(vecs, dtype=object))
-    for v, cells in zip(vecs, out):
-        d = ((cent - v) ** 2).sum(axis=1)
-        np.testing.assert_array_equal(cells, np.argsort(d, kind="stable")[:2])
-    assert len(assign(pd.Series([], dtype=object))) == 0

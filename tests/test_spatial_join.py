@@ -901,3 +901,38 @@ def test_interleaved_same_op_released_pin_recomputes(spark, images,
     b = {(r["image_id"], r["poly_id"]) for r in second.collect()}
     assert a == b and len(a) > 0
     SJ.release_pinned_caches()
+
+
+def test_release_pinned_caches_frees_every_operator_pin(spark, images,
+                                                        buildings):
+    """One owner releases every pin: after a PIP join (memo cover), a
+    how='left' PIP join, a raster join, a kNN join and
+    connected_components each ran an action, release_pinned_caches()
+    empties the pin registry and the cover memo, and no RDD those calls
+    persisted is left in the session."""
+    from pyrosm_spark.operators import spatial_join as SJ
+    from pyrosm_spark.operators.graph import connected_components
+    from pyrosm_spark.operators.spatial_join import raster_polygon_join
+
+    def persisted():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    SJ.release_pinned_caches()
+    buildings.count()  # the fixture's own cache predates the calls
+    before = persisted()
+    point_in_polygon_join(images, buildings, res=15).count()
+    point_in_polygon_join(images, buildings, res=15, how="left",
+                          point_id_col="image_id").count()
+    tiles_df = assign_tiles(images, 12).groupBy("cell").count()
+    raster_polygon_join(tiles_df, buildings, res=12).count()
+    targets = images.select(F.col("image_id").alias("id"), "lon", "lat")
+    knn_join(images.select("image_id", "lon", "lat"), targets,
+             k=3, res=10).count()
+    edges = spark.createDataFrame([(1, 2), (2, 3), (3, 1), (4, 5)],
+                                  "u long, v long")
+    assert connected_components(edges).select("comp").distinct().count() == 2
+    assert SJ._PINNED and SJ._PIN_MEMO  # the calls did pin
+    SJ.release_pinned_caches()
+    assert not SJ._PINNED and not SJ._PIN_MEMO
+    left = persisted() - before
+    assert not left, f"persisted RDDs left after release: {sorted(left)}"
